@@ -209,56 +209,63 @@ def run_transform(spark: SparkSession, config: dict, model: Model) -> dict[str, 
     os.makedirs(report_dir, exist_ok=True)
 
     written: dict[str, list[str]] = {"nodes": [], "reports": []}
-    ui_reports: list[DataFrame] = []
-    ssn_reports: list[DataFrame] = []
-    results: list[tuple[str, PipelineResult]] = []
+    try:
+        ui_reports: list[DataFrame] = []
+        ssn_reports: list[DataFrame] = []
+        results: list[tuple[str, PipelineResult]] = []
 
-    for path in data_files(config):
-        base = os.path.basename(path)
-        prefix = os.path.splitext(base)[0]
-        log.info("start transforming %s", base)
-        result = pipe.run(read_metadata(spark, path), raw_data_name=base)
-        result.tables = _apply_history(config, result.tables)
-        results.append((prefix, result))
-        if result.ui_report is not None:
-            ui_reports.append(result.ui_report)
-        if result.ssn_report is not None:
-            ssn_reports.append(result.ssn_report)
+        for path in data_files(config):
+            base = os.path.basename(path)
+            prefix = os.path.splitext(base)[0]
+            log.info("start transforming %s", base)
+            result = pipe.run(read_metadata(spark, path), raw_data_name=base)
+            result.tables = _apply_history(config, result.tables)
+            results.append((prefix, result))
+            if result.ui_report is not None:
+                ui_reports.append(result.ui_report)
+            if result.ssn_report is not None:
+                ssn_reports.append(result.ssn_report)
 
-    for prefix, result in results:
-        for node, df in result.tables.items():
-            p = write_tsv_file(df, out_dir, node, prefix=prefix)
-            if p:
-                written["nodes"].append(p)
-                log.info("wrote %s", p)
-        for rep, name in (
-            (result.id_report, "ID_validation_result"),
-            (result.parent_report, "Parent_validation_result"),
+        # write_tsv_file skips frames without data (empty reports included).
+        for prefix, result in results:
+            for node, df in result.tables.items():
+                p = write_tsv_file(df, out_dir, node, prefix=prefix)
+                if p:
+                    written["nodes"].append(p)
+                    log.info("wrote %s", p)
+            for rep, name in (
+                (result.id_report, "ID_validation_result"),
+                (result.parent_report, "Parent_validation_result"),
+            ):
+                if rep is not None:
+                    p = write_tsv_file(rep, report_dir, name, prefix=prefix)
+                    if p:
+                        written["reports"].append(p)
+
+        def _union_all(frames: list[DataFrame]) -> DataFrame | None:
+            frames = [f for f in frames if f is not None]
+            if not frames:
+                return None
+            out = frames[0]
+            for f in frames[1:]:
+                out = out.unionByName(f)
+            return out
+
+        for frames, name in (
+            (ui_reports, "Properties_validation_result"),
+            (ssn_reports, "Filename_validation_result"),
         ):
-            if rep is not None and not rep.isEmpty():
-                p = write_tsv_file(rep, report_dir, name, prefix=prefix)
+            merged = _union_all(frames)
+            if merged is not None:
+                p = write_tsv_file(merged, report_dir, name, prefix=batch)
                 if p:
                     written["reports"].append(p)
-
-    def _union_all(frames: list[DataFrame]) -> DataFrame | None:
-        frames = [f for f in frames if f is not None]
-        if not frames:
-            return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    for frames, name in (
-        (ui_reports, "Properties_validation_result"),
-        (ssn_reports, "Filename_validation_result"),
-    ):
-        merged = _union_all(frames)
-        if merged is not None and not merged.isEmpty():
-            p = write_tsv_file(merged, report_dir, name, prefix=batch)
-            if p:
-                written["reports"].append(p)
-                log.info("wrote %s", p)
+                    log.info("wrote %s", p)
+    finally:
+        # Every sink has run (or the batch failed): release each data
+        # file's ingest cache, so a long-lived session does not pin the
+        # scans of every batch it has seen.
+        pipe.unpersist()
     return written
 
 

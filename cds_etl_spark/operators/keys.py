@@ -1,6 +1,6 @@
 """Derived-key operators (O9/O10/O11).
 
-Reference semantics re-expressed as vectorized expressions / joins:
+Reference semantics re-expressed as vectorized expressions:
 
 * `combine_columns` (cds_transformation_functions.py:362-393): build
   `new = canon(col1) || '_' || canon(col2)` rowwise, only when both are
@@ -9,11 +9,12 @@ Reference semantics re-expressed as vectorized expressions / joins:
   loop of `.loc[i, c]` scalar reads/writes — O(rows) interpreter-bound;
   here it is one `concat_ws` expression inside codegen. The
   `external_node` variant aligns the other table's column BY ROW
-  POSITION (:384-388) → re-expressed as an equi-join on the ingest
-  `_row_id` (see projection.with_row_id).
+  POSITION (:384-388) → that table's expression for the column, taken
+  over the same ingest row (see projection.NodeProjection).
 
 * `add_secondary_id` (:402-418): if a node's id column is missing,
-  copy the parent's id column row-by-row (positional) → `_row_id` join.
+  copy the parent's id column row-by-row (positional) → the parent's
+  expression for it, added to the node's projection.
 
 * `synthetic_file_id` (v1.2 `extract_data`,
   cds-transformation_v1.2.py:66-73): missing file_id filled from a GUID
@@ -29,15 +30,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cds_etl_spark.operators.projection import ROW_ID
+from cds_etl_spark.operators.projection import ROW_ID, NodeProjection
 
-NodeTables = dict[str, DataFrame]
+NodeProjections = dict[str, NodeProjection]
 
 
-def canonical_string(df: DataFrame, col: str) -> Column:
+def canonical_string(c: Column, dtype: str) -> Column:
     """Reference `convert_to_string`: integral floats lose the '.0'."""
-    c = F.col(f"`{col}`")
-    dtype = dict(df.dtypes).get(col)
     if dtype in ("double", "float"):
         return F.when(c == F.floor(c), c.cast("long").cast("string")).otherwise(
             c.cast("string")
@@ -45,68 +44,48 @@ def canonical_string(df: DataFrame, col: str) -> Column:
     return c.cast("string")
 
 
-def combine_columns(tables: NodeTables, combine_config: list[dict]) -> NodeTables:
+def combine_columns(tables: NodeProjections, combine_config: list[dict]) -> NodeProjections:
     """Apply every COMBINE_COLUMN rule (config shape mirrors
     cds_config_example_v1.3.yaml:75-99: node, column1, column2,
-    new_column, external_node)."""
+    new_column, external_node). ``column1`` comes from
+    ``external_node`` when one is named, else from ``node`` itself."""
     out = dict(tables)
     for rule in combine_config:
         node = rule["node"]
         if node not in out:
             continue
-        df = out[node]
+        proj = out[node]
         c1, c2, new = rule["column1"], rule["column2"], rule["new_column"]
-        external = rule.get("external_node") or False
-        if not external:
-            if c1 not in df.columns or c2 not in df.columns:
-                continue
-            value = F.when(
-                F.col(f"`{c1}`").isNotNull() & F.col(f"`{c2}`").isNotNull(),
-                F.concat_ws("_", canonical_string(df, c1), canonical_string(df, c2)),
-            )
-            out[node] = df.withColumn(new, value)
-        else:
-            ext = out.get(external)
-            if ext is None or c1 not in ext.columns or c2 not in df.columns:
-                continue
-            if ROW_ID not in df.columns or ROW_ID not in ext.columns:
-                raise ValueError(
-                    "external_node combine requires _row_id alignment (ingest via with_row_id)"
-                )
-            side = ext.select(
-                F.col(ROW_ID), canonical_string(ext, c1).alias("_ext_val")
-            )
-            joined = df.join(side, ROW_ID, "left")
-            value = F.when(
-                F.col("_ext_val").isNotNull() & F.col(f"`{c2}`").isNotNull(),
-                F.concat_ws("_", F.col("_ext_val"), canonical_string(df, c2)),
-            )
-            out[node] = joined.withColumn(new, value).drop("_ext_val")
+        first = out.get(rule.get("external_node") or node)
+        if first is None or c1 not in first.columns or c2 not in proj.columns:
+            continue
+        e1, e2 = first.columns[c1], proj.columns[c2]
+        value = F.when(
+            e1.isNotNull() & e2.isNotNull(),
+            F.concat_ws(
+                "_",
+                canonical_string(e1, first.dtype(c1)),
+                canonical_string(e2, proj.dtype(c2)),
+            ),
+        )
+        out[node] = proj.with_column(new, value)
     return out
 
 
-def add_secondary_id(tables: NodeTables, secondary_config: list[dict]) -> NodeTables:
+def add_secondary_id(tables: NodeProjections, secondary_config: list[dict]) -> NodeProjections:
     """SECONDARY_ID_COLUMN rules (cds_config_example_v1.3.yaml:101-113):
     when `node_id` is absent from the node, fill it from
-    `secondary_id` = "parent_node.parent_prop", aligned on `_row_id`."""
+    `secondary_id` = "parent_node.parent_prop" of the same ingest row."""
     out = dict(tables)
     for rule in secondary_config:
         node = rule["node"]
-        if node not in out:
-            continue
-        df = out[node]
-        if rule["node_id"] in df.columns:
+        if node not in out or rule["node_id"] in out[node].columns:
             continue
         parent_node, parent_prop = rule["secondary_id"].split(".", 1)
         parent = out.get(parent_node)
         if parent is None or parent_prop not in parent.columns:
             continue
-        if ROW_ID not in df.columns or ROW_ID not in parent.columns:
-            raise ValueError(
-                "add_secondary_id requires _row_id alignment (ingest via with_row_id)"
-            )
-        side = parent.select(F.col(ROW_ID), F.col(parent_prop).alias(rule["node_id"]))
-        out[node] = df.join(side, ROW_ID, "left")
+        out[node] = out[node].with_column(rule["node_id"], parent.columns[parent_prop])
     return out
 
 

@@ -13,23 +13,29 @@ phases (cds-transformation_v1.3.py):
 Spark re-expression: the projection is a single `select` of aliased
 columns (column pruning reaches the scan); the all-null guards are one
 aggregate pass computing every candidate column's non-null count at
-once (the reference scans per column).
+once (the reference scans per column), shared by every node of a scan.
 
-`with_row_id` pins the reference's implicit row identity: several ops
-(O10 external_node, O11, O12-v1.3) copy columns *by row position*
-between node frames. All node frames are projections of one
-denormalized metadata scan, so position-alignment is really
-same-source-row alignment — carrying an explicit `_row_id` from that
-scan turns every positional op into an equi-join that is correct under
-any partitioning (the reference's positional semantics would silently
-break at scale; this formulation does not).
+Alignment. Several ops (O10 external_node, O11, O12-v1.3) copy columns
+*by row position* between node frames. In v1.3 every node frame is a
+projection of one denormalized metadata scan, so position-alignment is
+really same-source-row alignment. `extract_node` therefore returns a
+`NodeProjection` — the node's columns as named expressions over that
+scan — and the positional ops add the parent's expression for a column
+to the child's projection: one `select` per node, correct under any
+partitioning, with no join and no row identity to keep stable.
+
+`with_row_id` remains for the flows whose frames come from DIFFERENT
+scans: the v1.2 sheets, the v1.0 workbooks and `reshape.zip_frames`
+carry an explicit `_row_id` and align by equi-join on it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from dataclasses import dataclass
 from difflib import SequenceMatcher
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cds_etl_spark.model import Model
@@ -76,6 +82,16 @@ def _non_null_counts(df: DataFrame, columns: list[str]) -> dict[str, int]:
     return {c: row[f"c{i}"] for i, c in enumerate(columns)}
 
 
+def mapped_non_null_counts(
+    df: DataFrame, raw_dict: dict[str, dict[str, str]], nodes: Iterable[str]
+) -> dict[str, int]:
+    """One aggregate pass → non-null count of every column of ``df``
+    that ``raw_dict`` maps to a property of one of ``nodes``."""
+    return _non_null_counts(
+        df, sorted({c for node in nodes for c in raw_dict.get(node, {}) if c in df.columns})
+    )
+
+
 def extract_raw_data_dict(
     df: DataFrame,
     model: Model,
@@ -103,13 +119,32 @@ def extract_raw_data_dict(
     return raw_dict
 
 
+@dataclass(frozen=True)
+class NodeProjection:
+    """One node table as ordered, named column expressions over the
+    scan ``src``; `frame` is the single ``select`` that builds it."""
+
+    src: DataFrame
+    columns: dict[str, Column]
+
+    def with_column(self, name: str, expr: Column) -> NodeProjection:
+        """``withColumn`` ordering: replace in place, else append."""
+        return NodeProjection(self.src, {**self.columns, name: expr})
+
+    def dtype(self, name: str) -> str:
+        return self.src.select(self.columns[name]).dtypes[0][1]
+
+    def frame(self) -> DataFrame:
+        return self.src.select(*[e.alias(n) for n, e in self.columns.items()])
+
+
 def extract_node(
     df: DataFrame,
     model: Model,
     node: str,
     raw_dict: dict[str, dict[str, str]],
-    keep_row_id: bool = True,
-) -> DataFrame:
+    counts: dict[str, int],
+) -> NodeProjection:
     """Project raw columns into model property names for one node and
     stamp `type` (reference `extract_data`,
     cds-transformation_v1.3.py:69-81).
@@ -117,27 +152,27 @@ def extract_node(
     For each property, candidate raw columns come from the dictionary;
     the first candidate with any non-null data wins (reference
     `match_col_from_raw_dict` :53-66 iterates candidates in dict order
-    with an all-null guard). All candidates' null-counts are computed
-    in one aggregate pass.
+    with an all-null guard). ``counts`` holds the candidates' non-null
+    counts (`mapped_non_null_counts`: one pass serves every node of a
+    scan). A ``_row_id`` on ``df`` is carried through.
     """
     mapping = raw_dict.get(node, {})
     by_prop: dict[str, list[str]] = {}
     for col, prop in mapping.items():
         if col in df.columns:
             by_prop.setdefault(prop, []).append(col)
-    counts = _non_null_counts(df, sorted({c for cols in by_prop.values() for c in cols}))
 
-    select_exprs = []
+    columns: dict[str, Column] = {}
     for prop in model.nodes[node]:
         for col in by_prop.get(prop, []):
             if counts.get(col, 0) > 0:
-                select_exprs.append(F.col(f"`{col}`").alias(prop))
+                columns[prop] = F.col(f"`{col}`")
                 break
-    if not select_exprs:
+    if not columns:
         # No mappable data for this node → empty frame with just `type`
         # (reference returns an empty DataFrame and sinks skip it).
-        empty = df.limit(0).select(F.lit(node).alias("type"))
-        return empty
-    if keep_row_id and ROW_ID in df.columns:
-        select_exprs.append(F.col(ROW_ID))
-    return df.select(*select_exprs).withColumn("type", F.lit(node))
+        return NodeProjection(df.limit(0), {"type": F.lit(node)})
+    if ROW_ID in df.columns:
+        columns[ROW_ID] = F.col(ROW_ID)
+    columns["type"] = F.lit(node)
+    return NodeProjection(df, columns)

@@ -3,9 +3,10 @@
 * `extract_parent_property` — attach the `parent.prop` FK column to a
   child node. The v1.3 reference copies the parent frame's column by
   row position (cds-transformation_v1.3.py:83-95), valid only because
-  both frames project the same metadata rows → here an equi-join on the
-  ingest `_row_id`. When frames don't share provenance, the keyed
-  variants below apply.
+  both frames project the same metadata rows → here the parent's
+  expression for the column joins the child's projection of that scan
+  (see projection.NodeProjection). When frames don't share provenance,
+  the keyed variants below apply.
 
 * `first_match_lookup` — the v1.2 mapping-sheet lookup
   (cds-transformation_v1.2.py:168-194): for each key take the FIRST
@@ -19,30 +20,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cds_etl_spark.operators.projection import ROW_ID
+from cds_etl_spark.operators.projection import ROW_ID, NodeProjection
 
-NodeTables = dict[str, DataFrame]
+NodeProjections = dict[str, NodeProjection]
 
 
-def extract_parent_property(tables: NodeTables, parent_mapping: list[dict]) -> NodeTables:
+def extract_parent_property(
+    tables: NodeProjections, parent_mapping: list[dict]
+) -> NodeProjections:
     """Attach `parent_node.property` FK columns per PARENT_MAPPING_COLUMNS
-    (cds_config_example_v1.3.yaml:22-62), aligned on `_row_id`."""
+    (cds_config_example_v1.3.yaml:22-62), taken from the same ingest row."""
     out = dict(tables)
     for rule in parent_mapping:
         node, parent_node, prop = rule["node"], rule["parent_node"], rule["property"]
         if node not in out or parent_node not in out:
             continue
-        child, parent = out[node], out[parent_node]
-        if prop not in parent.columns:
-            continue
-        fk = f"{parent_node}.{prop}"
-        if ROW_ID in child.columns and ROW_ID in parent.columns:
-            side = parent.select(F.col(ROW_ID), F.col(prop).alias(fk))
-            out[node] = child.join(side, ROW_ID, "left")
-        else:
-            raise ValueError(
-                "extract_parent_property requires _row_id alignment (ingest via with_row_id)"
-            )
+        parent = out[parent_node]
+        if prop in parent.columns:
+            out[node] = out[node].with_column(f"{parent_node}.{prop}", parent.columns[prop])
     return out
 
 

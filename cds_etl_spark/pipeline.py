@@ -8,10 +8,14 @@ Stage order matches the reference exactly:
     UI validation → SSN scan → ID validation (incl. cascade delete) →
     historical state → TSV sinks.
 
-Every stage is a pure NodeTables → NodeTables transform from
-`operators/`; nothing materializes until the sinks (or a validation
-report) run, so Catalyst sees the whole per-node program and prunes
-columns all the way back to the ingest scan.
+The projection stage (`CdsPipeline.project`: schema projection,
+secondary ids, combined keys, parent FKs, node drops) works on
+`NodeProjection`s over the ingest scan and hands NodeTables to the
+later stages; how it replaces the reference's row-position copies is
+in operators/projection.py. Every later stage is a pure NodeTables →
+NodeTables transform from `operators/`. Nothing materializes until the
+sinks (or a validation report) run, so Catalyst sees the whole per-node
+program and prunes columns all the way back to the ingest scan.
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from cds_etl_spark.operators import (
     combine_columns,
     combine_rows,
     drop_all_null_prop_rows,
-    drop_internal,
+    drop_internal,  # noqa: F401 (see below)
     extract_node,
     extract_parent_property,
     id_validation,
@@ -37,8 +41,14 @@ from cds_etl_spark.operators import (
     ssn_validation,
     string_canonical_dedup,
     ui_validation,
-    with_row_id,
+    with_row_id,  # noqa: F401 (see below)
 )
+from cds_etl_spark.operators.projection import mapped_non_null_counts
+
+# The v1.3 path stamps no row id, so it neither adds nor strips one;
+# `with_row_id` and `drop_internal` stay bound here because
+# perfbench/spans.py traces every v1.3 operator by its name on this
+# module (an uncalled one reports 0).
 
 NodeTables = dict[str, DataFrame]
 
@@ -66,28 +76,46 @@ class CdsPipeline:
     clean_dict: dict = field(default_factory=dict)
     ui_mapping: dict[str, list[str]] = field(default_factory=dict)
 
-    def run(self, metadata: DataFrame, raw_data_name: str = "batch") -> PipelineResult:
-        cfg = self.config
-        # O3/O4 + stable row identity for the positional-compat joins.
-        # Cached: row ids must not change across downstream recomputes.
-        src = with_row_id(normalize_strings(metadata)).cache()
+    _cached: list[DataFrame] = field(default_factory=list, init=False, repr=False)
 
-        # O6 schema-mapping projection per node.
-        tables: NodeTables = {
-            node: extract_node(src, self.model, node, self.raw_dict)
+    def unpersist(self) -> None:
+        """Release the ingest caches of every ``run`` so far. The CLI
+        calls this once a batch's tables and reports are written."""
+        for df in self._cached:
+            df.unpersist()
+        self._cached = []
+
+    def project(self, src: DataFrame) -> NodeTables:
+        """O6 schema projection, O11 secondary ids, O10 combined keys,
+        O12 parent FKs and O20 node drops: one ``select`` per node over
+        ``src``, after one aggregate pass for the null guards."""
+        cfg = self.config
+        counts = mapped_non_null_counts(src, self.raw_dict, self.model.nodes)
+        nodes = {
+            node: extract_node(src, self.model, node, self.raw_dict, counts)
             for node in self.model.nodes
         }
-        tables = add_secondary_id(tables, cfg.get("SECONDARY_ID_COLUMN", []))  # O11
-        tables = combine_columns(tables, cfg.get("COMBINE_COLUMN", []))  # O10
-        tables = extract_parent_property(tables, cfg.get("PARENT_MAPPING_COLUMNS", []))  # O12
-        tables = remove_nodes(tables, cfg.get("REMOVE_NODES", []))  # O20
+        nodes = add_secondary_id(nodes, cfg.get("SECONDARY_ID_COLUMN", []))  # O11
+        nodes = combine_columns(nodes, cfg.get("COMBINE_COLUMN", []))  # O10
+        nodes = extract_parent_property(nodes, cfg.get("PARENT_MAPPING_COLUMNS", []))  # O12
+        nodes = remove_nodes(nodes, cfg.get("REMOVE_NODES", []))  # O20
+        return {node: proj.frame() for node, proj in nodes.items()}
 
-        # O17 + O8 — row-id is dropped here (it would defeat dedup).
+    def run(self, metadata: DataFrame, raw_data_name: str = "batch") -> PipelineResult:
+        cfg = self.config
+        # O3/O4. Cached: every node table and validation stage reads it.
+        src = normalize_strings(metadata).cache()
+        self._cached.append(src)
+        tables = self.project(src)
+
+        # O17 + O8.
         id_fields = cfg.get("NODE_ID_FIELD", {})
         for node in list(tables):
-            df = string_canonical_dedup(drop_internal(tables[node]))
             tables[node] = drop_all_null_prop_rows(
-                df, self.model, node, id_fields.get(node, "")
+                string_canonical_dedup(tables[node]),
+                self.model,
+                node,
+                id_fields.get(node, ""),
             )
 
         tables = combine_rows(tables, cfg.get("COMBINE_NODE", []))  # O18

@@ -61,7 +61,7 @@ from cds_etl_spark.operators import (
     with_row_id,
 )
 from cds_etl_spark.operators.keys import synthetic_file_id
-from cds_etl_spark.operators.projection import ROW_ID
+from cds_etl_spark.operators.projection import ROW_ID, mapped_non_null_counts
 from cds_etl_spark.operators.relations import first_match_lookup
 
 NodeTables = dict[str, DataFrame]
@@ -133,7 +133,10 @@ class CdsPipelineV12:
         tables: NodeTables = {}
         for sheet, node in SHEET_NODES.items():
             if sheet in src:
-                tables[node] = extract_node(src[sheet], self.model, node, self.raw_dict)
+                counts = mapped_non_null_counts(src[sheet], self.raw_dict, [node])
+                tables[node] = extract_node(
+                    src[sheet], self.model, node, self.raw_dict, counts
+                ).frame()
 
         # file_id fallback (:66-73): GUID/guid column from the raw
         # sheet, else a synthetic id. The raw GUID rides the row id.

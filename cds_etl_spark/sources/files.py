@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -28,18 +28,20 @@ def read_tsv(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.csv(path)
 
 
-def _has_data(df: DataFrame) -> bool:
-    """Reference guard: skip frames with no non-all-null row
-    (:119-120). A row-limit probe, not a full count. Explicit
+def _any_set(df: DataFrame) -> Column:
+    """True for a row with at least one non-null value. Explicit
     backticked predicate instead of dropna: column names may contain
     dots (parent-FK columns like ``study.phs_accession``), which
     dropna's unescaped resolution breaks on."""
     from functools import reduce
 
-    any_set = reduce(
-        lambda a, b: a | b, [F.col(f"`{c}`").isNotNull() for c in df.columns]
-    )
-    return len(df.where(any_set).limit(1).take(1)) > 0
+    return reduce(lambda a, b: a | b, [F.col(f"`{c}`").isNotNull() for c in df.columns])
+
+
+def _has_data(df: DataFrame) -> bool:
+    """Reference guard: skip frames with no non-all-null row
+    (:119-120). A row-limit probe, not a full count."""
+    return len(df.where(_any_set(df)).limit(1).take(1)) > 0
 
 
 def write_node_tsv(
@@ -70,20 +72,26 @@ def write_report_tsv(df: DataFrame, out_dir: str, name: str, prefix: str = "") -
 def write_tsv_file(df: DataFrame, out_dir: str, name: str, prefix: str = "") -> str | None:
     """Reference `print_data` file contract: ONE flat
     ``<prefix>-<name>.tsv`` (cds_transformation_functions.py:106-122),
-    not a part-file directory. The frame is written through the normal
-    csv sink into a hidden temp dir, then the single part file is
-    promoted with a filesystem rename — scheme-agnostic (file://,
+    not a part-file directory, and no file for a frame without a
+    non-all-null row (:119-120). The frame is written through the
+    normal csv sink into a hidden temp dir, then the single part file
+    is promoted with a filesystem rename — scheme-agnostic (file://,
     s3a://, ...) and metadata-only on posix filesystems. Edge sink for
     metadata-scale nodes; the scale path stays `write_node_tsv`
-    (one file per partition)."""
-    if not _has_data(df):
-        return None
+    (one file per partition).
+
+    The has-data guard rides the write job as an observed metric, so
+    a call runs one Spark job; a frame that fails the guard leaves
+    only its temp dir, which is deleted, and ``None`` is returned
+    with any existing destination file untouched."""
     from cds_etl_spark.sources.transfer import _fs_and_path
 
     file_base = f"{prefix}-{name}" if prefix else name
     tmp = os.path.join(out_dir, f".{file_base}.tmp")
+    seen = Observation()
     (
-        df.coalesce(1)
+        df.observe(seen, F.count(F.when(_any_set(df), True)).alias("rows_with_data"))
+        .coalesce(1)
         .write.mode("overwrite")
         .option("sep", "\t")
         .option("header", True)
@@ -93,6 +101,9 @@ def write_tsv_file(df: DataFrame, out_dir: str, name: str, prefix: str = "") -> 
     )
     spark = df.sparkSession
     fs, tmp_path = _fs_and_path(spark, tmp)
+    if not seen.get["rows_with_data"]:
+        fs.delete(tmp_path, True)
+        return None
     parts = [
         st.getPath()
         for st in fs.listStatus(tmp_path)

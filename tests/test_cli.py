@@ -183,3 +183,12 @@ def test_upload_and_download_roundtrip(workdir, spark):
     got = download_batch(spark, config)
     assert len(got) == 1
     assert os.path.exists(workdir / "raw" / "batch2" / "meta9.tsv")
+
+
+def test_transform_releases_ingest_caches(workdir, spark):
+    """A batch leaves nothing in the session's cache: each data file's
+    ingest scan is unpersisted once the batch's sinks have run."""
+    spark.catalog.clearCache()  # start from an empty cache in the shared session
+    assert main(["--config_file", str(workdir / "config.yaml")], spark=spark) == 0
+    assert (workdir / "out" / "batch1" / "meta1-study.tsv").exists()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cds_etl_spark.model import load_model
+from cds_etl_spark.operators import normalize_strings
 from cds_etl_spark.pipeline import CdsPipeline
 
 MODEL_YAML = {
@@ -135,8 +136,7 @@ ROWS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def result(spark):
+def _fixture_metadata(spark):
     schema = (
         "`phs_accession` string, `study_name` string, `study_data_type` string, "
         "`study_version` string, `participant id` string, `gender` string, "
@@ -144,10 +144,14 @@ def result(spark):
         "`file_type` string, `file_size` double, `library_strategy` string, "
         "`bases` double, `treatment_type` string"
     )
-    metadata = spark.createDataFrame(ROWS, schema=schema)
+    return spark.createDataFrame(ROWS, schema=schema)
+
+
+@pytest.fixture(scope="module")
+def result(spark):
     model = load_model(MODEL_YAML, PROPS_YAML)
     pipe = CdsPipeline(model, RAW_DICT, CONFIG, CLEAN_DICT, UI_MAPPING)
-    return pipe.run(metadata, raw_data_name="fixture.xlsx")
+    return pipe.run(_fixture_metadata(spark), raw_data_name="fixture.xlsx")
 
 
 def rows_of(result, node):
@@ -232,3 +236,59 @@ def test_reports(result):
     )
     ui = [r.asDict() for r in result.ui_report.collect()]
     assert any(r["Missing_Properties"] == "participant.ethnicity" for r in ui)
+
+
+def test_projection_stage_has_no_joins(spark):
+    """Secondary ids, combined keys and parent FKs are column
+    expressions over the one ingest scan: every node table leaving the
+    projection stage is a single select, not a row-id self-join."""
+    model = load_model(MODEL_YAML, PROPS_YAML)
+    pipe = CdsPipeline(model, RAW_DICT, CONFIG, CLEAN_DICT, UI_MAPPING)
+    tables = pipe.project(normalize_strings(_fixture_metadata(spark)))
+    assert set(tables) == set(MODEL_YAML["Nodes"]) - {"treatment"}
+    for node, df in tables.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, f"{node}:\n{plan}"
+    # The copied columns are there, aligned on the source row.
+    sample = {tuple(r) for r in tables["sample"].select("sample_id", "`participant.participant_id`").collect()}
+    assert ("S5_Tumor", "P4") in sample and ("S6_Tumor", "P5") in sample
+    genomic = {tuple(r) for r in tables["genomic_info"].select("library_id", "`file.file_id`").collect()}
+    assert ("F4", "F4") in genomic
+
+
+def test_child_without_mapped_columns_is_empty(spark):
+    """A node named in PARENT_MAPPING_COLUMNS whose data file has none of
+    its columns comes out empty (and the sink skips it) instead of
+    failing the run."""
+    model = load_model(
+        {
+            "Version": "test",
+            "Nodes": {
+                "study": {"Props": ["phs_accession", "study_name"]},
+                "participant": {"Props": ["participant_id", "gender"]},
+            },
+            "Relationships": {
+                "of_study": {"Mul": "many_to_one", "Ends": [{"Src": "participant", "Dst": "study"}]},
+            },
+        },
+        {"PropDefinitions": {}},
+    )
+    config = {
+        "NODE_ID_FIELD": {"study": "phs_accession", "participant": "participant_id"},
+        "PARENT_MAPPING_COLUMNS": [
+            {"node": "participant", "parent_node": "study", "property": "phs_accession", "relationship": "of_study"}
+        ],
+    }
+    raw_dict = {
+        "study": {"phs_accession": "phs_accession", "study_name": "study_name"},
+        "participant": {"participant id": "participant_id", "gender": "gender"},
+    }
+    metadata = spark.createDataFrame(
+        [("phs001", "StudyA"), ("phs001", "StudyA")], "phs_accession string, study_name string"
+    )
+    out = CdsPipeline(model, raw_dict, config).run(metadata, raw_data_name="study_only.tsv")
+    assert [tuple(r) for r in out.tables["study"].collect()] == [("phs001", "StudyA", "study")]
+    participant = out.tables["participant"]
+    assert participant.columns == ["type", "study.phs_accession"]
+    assert participant.count() == 0
+    assert out.id_report.count() == 0 and out.parent_report.count() == 0

@@ -32,10 +32,13 @@ def test_profile_realigned_on_reused_session(spark):
     )
 
     # And back to the plain profile (also restores the fixture's state
-    # for every later test in the session).
+    # for every later test in the session). It sizes shuffles to the
+    # core count, which may equal the latency profile's 4, so a conf
+    # only the latency/scale profiles set shows the switch as well.
     s4 = get_spark()
     assert s4.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert s4.conf.get("spark.sql.shuffle.partitions") != "4"
+    assert s4.conf.get("spark.sql.shuffle.partitions") == str(default_parallelism())
+    assert s4.conf.get("spark.sql.inMemoryColumnarStorage.compressed") == "true"
     assert s4.conf.get("spark.cds_etl.local_latency") == "false"
 
 

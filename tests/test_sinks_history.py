@@ -1,8 +1,10 @@
 """Sinks (O30/O31) + historical state (O28/O29): TSV roundtrip, the
 all-null skip guard, and idempotent history merge/re-stamp."""
 
+import os
+
 from cds_etl_spark.operators.history import add_historical_value, stamp_historical_value
-from cds_etl_spark.sources.files import read_tsv, write_node_tsv, write_report_tsv
+from cds_etl_spark.sources.files import read_tsv, write_node_tsv, write_report_tsv, write_tsv_file
 
 
 def test_tsv_roundtrip_and_null_skip(spark, tmp_path):
@@ -19,6 +21,45 @@ def test_tsv_roundtrip_and_null_skip(spark, tmp_path):
     empty = spark.createDataFrame([(None, None)], "a string, b string")
     assert write_node_tsv(empty, str(tmp_path), "empty") is None
     assert write_report_tsv(empty.limit(0), str(tmp_path), "report") is None
+
+
+def _jobs_of(spark, group, fn):
+    """(fn(), number of Spark jobs it ran), counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_tsv_file_is_one_job(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("phs001", None), (None, "v2")], "phs_accession string, `study.version` string"
+    )
+    path, jobs = _jobs_of(
+        spark, "write_tsv_file_data", lambda: write_tsv_file(df, str(tmp_path), "study", "b1")
+    )
+    assert jobs == 1
+    assert path == os.path.join(str(tmp_path), "b1-study.tsv")
+    with open(path) as f:
+        assert f.read().splitlines() == ["phs_accession\tstudy.version", "phs001\t", "\tv2"]
+    assert sorted(os.listdir(tmp_path)) == [".b1-study.tsv.crc", "b1-study.tsv"]
+
+
+def test_write_tsv_file_skips_frames_without_data(spark, tmp_path):
+    dest = tmp_path / "b1-node.tsv"
+    dest.write_text("previous batch\n")
+    all_null = spark.createDataFrame([(None, None)], "a string, b string")
+    for i, frame in enumerate((all_null, all_null.limit(0), all_null.filter("a = 'x'"))):
+        path, jobs = _jobs_of(
+            spark, f"write_tsv_file_skip{i}", lambda: write_tsv_file(frame, str(tmp_path), "node", "b1")
+        )
+        assert path is None and jobs == 1
+        # No temp dir left behind; the existing destination is untouched.
+        assert sorted(os.listdir(tmp_path)) == ["b1-node.tsv"]
+        assert dest.read_text() == "previous batch\n"
 
 
 def test_history_merge_and_stamp(spark, tmp_path):
