@@ -49,8 +49,9 @@ table is safe to pin the way it is pinned.
 
 ``"iterative"``
     The per-round frame of a fixpoint loop (connected components,
-    label propagation, pagerank, BPE merges, cascade deletes). Caching
-    is NOT enough here: the *logical plan* doubles per round and
+    label propagation, pagerank, BPE merges), and ID validation's one
+    cut per node: its deduped frame, which the cascades of the nodes
+    judged after it keep re-deriving. Caching is NOT enough here: the *logical plan* doubles per round and
     analysis itself stalls, so the plan must be truncated —
     :func:`cut_lineage`, always.
 

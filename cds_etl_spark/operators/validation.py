@@ -8,6 +8,13 @@ DataFrame algebra — bad-id sets are DataFrames flowing into broadcast
 anti-joins, never collected lists, so the same code path works when a
 node table is 10^9 rows and the bad set is 10^6.
 
+ID validation judges each node once: one `groupBy(id)` gives every id
+its orphan flag, row count and conflict list, and the orphan ids O and
+the non-exempt duplicate ids B are deleted together behind one guard.
+The reference cascades O and then B; one cascade of O ∪ B removes the
+same rows, because FK nulling only adds nulls, the all-null drop is
+idempotent, and B is judged per id, so deleting O first cannot change it.
+
 Deliberate deviations from reference *implementation* (same intended
 semantics, documented for the parity check):
   * The reference's `mul` flag (:214) is initialized once OUTSIDE the
@@ -47,20 +54,6 @@ def _bt(c: str) -> F.Column:
     return F.col(f"`{c}`")
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate lineage at a validation stage boundary.
-
-    The cascade recursion re-derives node tables from one another; left
-    lazy, each table's logical plan would embed every upstream table's
-    plan several times over (exponential in DAG depth — analysis alone
-    stalls). `localCheckpoint` pins the stage result on the executors
-    and gives downstream stages a flat scan — the standard Spark
-    treatment for iterative/fixpoint algorithms; one distributed pass
-    per stage, mirroring the eager semantics the reference's pandas
-    pipeline has implicitly."""
-    return cut_lineage(df)  # pin: iterative (cascade recursion frame)
-
-
 def _fk_cols(node: str, parent_mapping: list[dict], columns: list[str]) -> list[str]:
     out = []
     for rule in parent_mapping:
@@ -83,12 +76,10 @@ def cascade_delete(
     recursively delete children left with ALL parent-FKs null, then
     drop those children. The relationship DAG is statically ≤5 deep
     (program→study→participant→sample→file→genomic_info), so this is
-    a bounded loop of broadcast anti-join stages — one shuffle-free
-    pass per DAG level, not a row-at-a-time recursion."""
+    a bounded, lazy chain of broadcast joins — one shuffle-free pass
+    per DAG level, not a row-at-a-time recursion."""
     tables = dict(tables)
-    bad = F.broadcast(
-        _materialize(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")).distinct())
-    )
+    bad = F.broadcast(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")).distinct())
     for rule in parent_mapping:
         if rule["parent_node"] != parent_node:
             continue
@@ -100,7 +91,7 @@ def cascade_delete(
         if fk not in cdf.columns:
             continue
         # Null-out FK hits (:184) via broadcast lookup.
-        cdf = _materialize(
+        cdf = (
             cdf.join(bad, _bt(fk) == F.col("_bad_id"), "left")
             .withColumn(fk, F.when(F.col("_bad_id").isNotNull(), None).otherwise(_bt(fk)))
             .drop("_bad_id")
@@ -124,6 +115,23 @@ def _distinct_incl_null(col: str) -> F.Column:
     return F.countDistinct(_bt(col)) + F.max(F.when(_bt(col).isNull(), 1).otherwise(0))
 
 
+def _report(spark, blocks: list[DataFrame], schema: str) -> DataFrame:
+    """One report from per-node blocks tagged ``_node`` (node-loop
+    position): a single partition, sorted by (``_node``, ``ID``) inside
+    it, so the TSV bytes are the same on every run without the range
+    sampling job of a global sort. The empty frame is built only when
+    there is no block: it is a Python-side scan, and reading it starts
+    a Python worker in the report's write job."""
+    if not blocks:
+        return spark.createDataFrame([], schema)
+    return (
+        reduce(DataFrame.unionByName, blocks)
+        .coalesce(1)
+        .sortWithinPartitions("_node", "ID")
+        .drop("_node")
+    )
+
+
 def id_validation(
     tables: NodeTables,
     node_id_field: dict[str, str],
@@ -132,17 +140,20 @@ def id_validation(
     raw_data_name: str = "",
 ) -> tuple[NodeTables, DataFrame, DataFrame]:
     """Duplicate-ID/conflict detection + orphan detection + cascades
-    (reference `id_validation`, :209-281).
+    (reference `id_validation`, :209-281), one verdict per node.
 
-    Returns (cleaned tables, id_report, parent_report); reports match
-    the reference's TSV schemas (:210-211) with the conflict-column
-    list rendered as its Python repr."""
+    One aggregate per id gives its orphan flag (:222-246), row count and
+    conflict list (:247-277); the bad set is pinned once, and both
+    reports are filters of it. Returns (cleaned tables, id_report,
+    parent_report); reports match the reference's TSV schemas
+    (:210-211) with the conflict-column list rendered as its Python
+    repr, each node's block sorted by ID."""
     tables = dict(tables)
     spark = next(iter(tables.values())).sparkSession if tables else None
     id_reports: list[DataFrame] = []
     parent_reports: list[DataFrame] = []
 
-    for node in list(tables.keys()):
+    for pos, node in enumerate(list(tables.keys())):
         if node not in node_id_field:
             continue
         id_col = node_id_field[node]
@@ -150,8 +161,11 @@ def id_validation(
         if id_col not in df.columns:
             continue
         # :218-219 — full-row dedup, then require an id.
-        df = _materialize(df.dropDuplicates().filter(_bt(id_col).isNotNull()))
+        df = cut_lineage(df.dropDuplicates().filter(_bt(id_col).isNotNull()))  # pin: iterative
         tables[node] = df
+        data_cols = [c for c in df.columns if c != id_col]
+        if not data_cols:  # one row per id after the dedup: nothing to judge
+            continue
 
         fk_cols = _fk_cols(node, parent_mapping, df.columns)
         node_muls = {
@@ -161,92 +175,75 @@ def id_validation(
         }
         has_m2m = "many_to_many" in node_muls
 
-        # ---- orphan detection (:222-246): ids whose EVERY parent-FK
-        # column has a null occurrence (id-level intersection, :238).
+        # Orphan (:238): EVERY parent-FK column has a null occurrence.
+        orphan = (
+            reduce(lambda a, b: a & b, [F.max(_bt(fk).isNull()) for fk in fk_cols])
+            if fk_cols
+            else F.lit(False)
+        )
+        verdict = df.groupBy(_bt(id_col).alias("_vid")).agg(
+            orphan.alias("_orphan"),
+            F.count(F.lit(1)).alias("_n"),
+            *[_distinct_incl_null(c).alias(f"_d{i}") for i, c in enumerate(data_cols)],
+        )
+        conflicts = F.filter(
+            F.array(*[F.when(F.col(f"_d{i}") > 1, F.lit(c)) for i, c in enumerate(data_cols)]),
+            lambda x: x.isNotNull(),
+        )
+        verdict = verdict.select("_vid", "_orphan", "_n", conflicts.alias("_conf"))
+        # many_to_many exemption (:264): sole conflict is a parent FK
+        # column (not one of the node's own model properties). An id
+        # seen once has an empty list, hence try_element_at.
+        own_props = list(model.nodes.get(node, []))
+        exempt = (
+            (F.size(F.col("_conf")) == 1)
+            & ~F.try_element_at(F.col("_conf"), F.lit(1)).isin(own_props)
+            if has_m2m
+            else F.lit(False)
+        )
+        # pin: corpus — the failure-id list feeds the guard, the
+        # anti-join, the cascade and both reports.
+        bad = cut_lineage(
+            verdict.filter(F.col("_orphan") | ((F.col("_n") > 1) & ~exempt)).drop("_n")
+        )
+        # The reference cascades only a NON-empty delete list (:244,
+        # :271); an unconditional call would still drop all-null-FK
+        # descendants (delete_children's dropna :193).
+        if not bad.isEmpty():
+            bad_ids = bad.select("_vid")
+            tables[node] = df.join(F.broadcast(bad_ids), _bt(id_col) == F.col("_vid"), "left_anti")
+            tables = cascade_delete(tables, parent_mapping, node_id_field, bad_ids, node)
         if fk_cols:
-            orphan = None
-            for fk in fk_cols:
-                ids_fk = df.filter(_bt(fk).isNull()).select(_bt(id_col).alias("_oid")).distinct()
-                orphan = ids_fk if orphan is None else orphan.intersect(ids_fk)
-            orphan = _materialize(orphan)
-            # The reference triggers the cascade only for a NON-empty
-            # delete list (:244); an unconditional call would still drop
-            # all-null-FK descendants (delete_children's dropna :193),
-            # deleting orphans before their own node's check reports them.
-            if not orphan.isEmpty():
-                df = _materialize(
-                    df.join(F.broadcast(orphan), _bt(id_col) == F.col("_oid"), "left_anti")
-                )
-                tables[node] = df
-                tables = cascade_delete(tables, parent_mapping, node_id_field, orphan, node)
-                df = tables[node]
             parent_reports.append(
-                orphan.select(
+                bad.filter(F.col("_orphan")).select(
+                    F.lit(pos).alias("_node"),
                     F.lit(node).alias("node name"),
-                    F.col("_oid").cast("string").alias("ID"),
+                    F.col("_vid").cast("string").alias("ID"),
                     F.lit(fk_cols[-1]).alias("parent ID field"),
                 )
             )
+        id_reports.append(
+            bad.filter(~F.col("_orphan")).select(
+                F.lit(pos).alias("_node"),
+                F.lit(node).alias("node name"),
+                F.col("_vid").cast("string").alias("ID"),
+                F.concat(
+                    F.lit("["),
+                    F.array_join(
+                        F.transform(F.col("_conf"), lambda x: F.concat(F.lit("'"), x, F.lit("'"))),
+                        ", ",
+                    ),
+                    F.lit("]"),
+                ).alias("conflict property"),
+            )
+        )
 
-        # ---- duplicate-id + conflict diagnosis (:247-277).
-        data_cols = [c for c in df.columns if c != id_col]
-        if data_cols:
-            agg = df.groupBy(_bt(id_col).alias("_vid")).agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[_distinct_incl_null(c).alias(f"_d{i}") for i, c in enumerate(data_cols)],
-            )
-            dups = agg.filter(F.col("_n") > 1)
-            conflicts = F.filter(
-                F.array(
-                    *[
-                        F.when(F.col(f"_d{i}") > 1, F.lit(c)).otherwise(F.lit(None))
-                        for i, c in enumerate(data_cols)
-                    ]
-                ),
-                lambda x: x.isNotNull(),
-            )
-            dups = dups.select("_vid", conflicts.alias("_conf"))
-            # many_to_many exemption (:264): sole conflict is a parent
-            # FK column (not one of the node's own model properties).
-            own_props = list(model.nodes.get(node, []))
-            exempt = (
-                (F.size(F.col("_conf")) == 1)
-                & ~F.element_at(F.col("_conf"), 1).isin(own_props)
-                if has_m2m
-                else F.lit(False)
-            )
-            bad = _materialize(dups.filter(~exempt))
-            if not bad.isEmpty():  # same non-empty guard as :271
-                df = _materialize(
-                    df.join(
-                        F.broadcast(bad.select("_vid")), _bt(id_col) == F.col("_vid"), "left_anti"
-                    )
-                )
-                tables[node] = df
-                tables = cascade_delete(
-                    tables, parent_mapping, node_id_field, bad.select("_vid"), node
-                )
-            id_reports.append(
-                bad.select(
-                    F.lit(node).alias("node name"),
-                    F.col("_vid").cast("string").alias("ID"),
-                    F.concat(
-                        F.lit("["),
-                        F.array_join(
-                            F.transform(
-                                F.col("_conf"), lambda x: F.concat(F.lit("'"), x, F.lit("'"))
-                            ),
-                            ", ",
-                        ),
-                        F.lit("]"),
-                    ).alias("conflict property"),
-                )
-            )
-
-    empty_id = spark.createDataFrame([], "`node name` string, ID string, `conflict property` string")
-    empty_parent = spark.createDataFrame([], "`node name` string, ID string, `parent ID field` string")
-    id_report = reduce(DataFrame.unionByName, id_reports, empty_id)
-    parent_report = reduce(DataFrame.unionByName, parent_reports, empty_parent)
+    id_report = _report(
+        spark, id_reports, "`node name` string, ID string, `conflict property` string"
+    )
+    parent_report = _report(
+        spark, parent_reports, "`node name` string, ID string, `parent ID field` string"
+    )
     return tables, id_report, parent_report
 
 

@@ -292,3 +292,46 @@ def test_child_without_mapped_columns_is_empty(spark):
     assert participant.columns == ["type", "study.phs_accession"]
     assert participant.count() == 0
     assert out.id_report.count() == 0 and out.parent_report.count() == 0
+
+
+def test_id_validation_judges_each_node_once(spark, monkeypatch):
+    """ID validation pins each node at most twice (its deduped frame and
+    its failure-id list) and runs one emptiness guard per node: one
+    verdict and one cascade per node, not a guard, an anti-join and a
+    cascade per failure kind. Calls are counted, not Spark jobs, so the
+    bound does not depend on the core count."""
+    from cds_etl_spark import pipeline
+    from cds_etl_spark.operators import validation
+
+    frame_cls = type(spark.range(0))
+    real_cut, real_is_empty, real_id_validation = (
+        validation.cut_lineage, frame_cls.isEmpty, pipeline.id_validation
+    )
+    calls = {"cut_lineage": 0, "isEmpty": 0}
+    validated = []
+
+    def cut_lineage(df, *args, **kwargs):
+        calls["cut_lineage"] += 1
+        return real_cut(df, *args, **kwargs)
+
+    def is_empty(df):
+        calls["isEmpty"] += 1
+        return real_is_empty(df)
+
+    def id_validation(tables, node_id_field, *args):
+        validated.extend(
+            n for n, df in tables.items() if node_id_field.get(n) in df.columns
+        )
+        with monkeypatch.context() as m:
+            m.setattr(validation, "cut_lineage", cut_lineage)
+            m.setattr(frame_cls, "isEmpty", is_empty)
+            return real_id_validation(tables, node_id_field, *args)
+
+    monkeypatch.setattr(pipeline, "id_validation", id_validation)
+    model = load_model(MODEL_YAML, PROPS_YAML)
+    CdsPipeline(model, RAW_DICT, CONFIG, CLEAN_DICT, UI_MAPPING).run(
+        _fixture_metadata(spark), raw_data_name="fixture.xlsx"
+    )
+    assert sorted(validated) == sorted(CONFIG["NODE_ID_FIELD"])
+    assert calls["cut_lineage"] <= 2 * len(validated), calls
+    assert calls["isEmpty"] <= len(validated), calls

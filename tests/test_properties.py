@@ -7,6 +7,10 @@ operators with the subtlest semantics:
 * cascade_delete — after deleting bad parent ids, no surviving child
   references a bad id and no surviving child has all parent-FKs null
   (the negation of cds_transformation_functions.py:189-193).
+* id_validation — tables and both reports equal a plain-Python
+  transcription of the reference's sequential algorithm (orphan step,
+  then conflict step, each behind its own guard and cascade), whatever
+  the node order.
 * clean_data — every output value of an enum column is in
   enum ∪ clean-dict range ∪ {nan_value, NOT_SPECIFIED} ∪ original
   values (passthrough).
@@ -20,7 +24,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from cds_etl_spark.model.schema import Model, PropDef, Relationship
-from cds_etl_spark.operators import cascade_delete, clean_data
+from cds_etl_spark.operators import cascade_delete, clean_data, id_validation
 from cds_etl_spark.operators.merge import combine_rows_node
 
 SETTINGS = dict(
@@ -136,6 +140,137 @@ def test_cascade_delete_properties(spark, parts, samps, bad):
     assert sorted(r["smid"] for r in surviving_samps) == sorted(
         m for m, p in samps if p is not None and p not in deleted_pids
     )
+
+
+# Four nodes: file has two parents, and its sample edge is many_to_many.
+VAL_COLS = {
+    "study": ["sid", "name"],
+    "participant": ["pid", "g", "study.sid"],
+    "sample": ["smid", "t", "participant.pid"],
+    "file": ["fid", "size", "sample.smid", "participant.pid"],
+}
+VAL_ID = {"study": "sid", "participant": "pid", "sample": "smid", "file": "fid"}
+VAL_MAPPING = [
+    {"node": "participant", "parent_node": "study", "property": "sid", "relationship": "of_study"},
+    {"node": "sample", "parent_node": "participant", "property": "pid",
+     "relationship": "of_participant"},
+    {"node": "file", "parent_node": "sample", "property": "smid", "relationship": "from_sample"},
+    {"node": "file", "parent_node": "participant", "property": "pid",
+     "relationship": "of_participant_file"},
+]
+VAL_MODEL = Model(
+    nodes={"study": ["sid", "name"], "participant": ["pid", "g"], "sample": ["smid", "t"],
+           "file": ["fid", "size"]},
+    relationships=[
+        Relationship(name="of_study", mul="many_to_one", src="participant", dst="study"),
+        Relationship(name="of_participant", mul="many_to_one", src="sample", dst="participant"),
+        Relationship(name="from_sample", mul="many_to_many", src="file", dst="sample"),
+        Relationship(name="of_participant_file", mul="many_to_one", src="file",
+                     dst="participant"),
+    ],
+)
+
+
+def _ids(prefix, n):
+    return st.one_of(st.none(), st.sampled_from([f"{prefix}{i}" for i in range(n)]))
+
+
+val = st.one_of(st.none(), st.sampled_from(["x", "y"]))
+val_tables = st.fixed_dictionaries({
+    "study": st.lists(st.tuples(_ids("s", 2), val), max_size=4),
+    "participant": st.lists(st.tuples(_ids("p", 3), val, _ids("s", 3)), max_size=6),
+    "sample": st.lists(st.tuples(_ids("m", 3), val, _ids("p", 3)), max_size=6),
+    "file": st.lists(st.tuples(_ids("f", 3), val, _ids("m", 3), _ids("p", 3)), max_size=8),
+})
+
+
+def _fks(node, cols):
+    return [f"{r['parent_node']}.{r['property']}" for r in VAL_MAPPING
+            if r["node"] == node and f"{r['parent_node']}.{r['property']}" in cols]
+
+
+def _ref_cascade(tables, bad, parent):
+    """`delete_children` (cds_transformation_functions.py:178-195)."""
+    for rule in VAL_MAPPING:
+        if rule["parent_node"] != parent:
+            continue
+        child, fk = rule["node"], f"{parent}.{rule['property']}"
+        cols = VAL_COLS[child]
+        j = cols.index(fk)
+        rows = [r[:j] + (None,) + r[j + 1:] if r[j] is not None and r[j] in bad else r
+                for r in tables[child]]
+        fk_pos = [cols.index(c) for c in _fks(child, cols)]
+
+        def all_null(r):
+            return all(r[k] is None for k in fk_pos)
+
+        tables[child] = rows
+        if any(r["parent_node"] == child for r in VAL_MAPPING):
+            _ref_cascade(tables, {r[0] for r in rows if all_null(r)}, child)
+            rows = tables[child]
+        tables[child] = [r for r in rows if not all_null(r)]
+
+
+def _ref_id_validation(tables):
+    """The reference's sequential `id_validation` (:209-281): per node,
+    orphans are deleted and cascaded behind their own guard, then the
+    non-exempt conflicting duplicates, behind theirs."""
+    tables = {n: list(rows) for n, rows in tables.items()}
+    id_rep, parent_rep = set(), set()
+    for node in tables:
+        cols = VAL_COLS[node]
+        rows = [r for r in dict.fromkeys(tables[node]) if r[0] is not None]
+        tables[node] = rows
+        fks = _fks(node, cols)
+        if fks:
+            orphan = {
+                i for i in {r[0] for r in rows}
+                if all(any(r[0] == i and r[cols.index(fk)] is None for r in rows) for fk in fks)
+            }
+            if orphan:
+                tables[node] = [r for r in rows if r[0] not in orphan]
+                _ref_cascade(tables, orphan, node)
+            parent_rep |= {(node, i, fks[-1]) for i in orphan}
+        rows = tables[node]
+        m2m = any(VAL_MODEL.mul_of(r["relationship"]) == "many_to_many"
+                  for r in VAL_MAPPING if r["node"] == node)
+        bad = {}
+        for i in {r[0] for r in rows}:
+            group = [r for r in rows if r[0] == i]
+            if len(group) < 2:
+                continue
+            conf = [c for k, c in enumerate(cols) if k and len({r[k] for r in group}) > 1]
+            if not (m2m and len(conf) == 1 and conf[0] not in VAL_MODEL.nodes[node]):
+                bad[i] = conf
+        if bad:
+            tables[node] = [r for r in rows if r[0] not in bad]
+            _ref_cascade(tables, set(bad), node)
+        id_rep |= {(node, i, "[" + ", ".join(f"'{c}'" for c in conf) + "]")
+                   for i, conf in bad.items()}
+    return tables, id_rep, parent_rep
+
+
+def _sorted_rows(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+@given(rows=val_tables, order=st.permutations(list(VAL_COLS)))
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_id_validation_matches_sequential_reference(spark, rows, order):
+    rows = {node: rows[node] for node in order}
+    tables = {
+        node: spark.createDataFrame(
+            rows[node], ", ".join(f"`{c}` string" for c in VAL_COLS[node]))
+        for node in order
+    }
+    out, id_report, parent_report = id_validation(tables, VAL_ID, VAL_MAPPING, VAL_MODEL)
+    want, want_id, want_parent = _ref_id_validation(rows)
+    for node in order:
+        assert out[node].columns == VAL_COLS[node]
+        assert _sorted_rows(out[node].collect()) == _sorted_rows(want[node]), node
+    assert {tuple(r) for r in id_report.collect()} == want_id
+    assert {tuple(r) for r in parent_report.collect()} == want_parent
 
 
 ENUM = ("Red", "Green", "Blue")
