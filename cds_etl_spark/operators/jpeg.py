@@ -23,8 +23,7 @@ trip) encodes via ``encode_jpeg_lossless`` and decodes through the
 same ``decode_jpeg`` entry point. Arithmetic coding (SOF9-11) and
 hierarchical (SOF5-7) raise ``NotImplementedError`` explicitly.
 
-The SOF9-11 / SOF5-7 decision (r10, recorded the way h264.py's
-CAVLC/CABAC gate was): PERMANENTLY deferred, for the same two
+The SOF9-11 / SOF5-7 decision (r10): PERMANENTLY deferred, for two
 reasons. (1) Validation: the QM-coder's probability-estimation state
 machine (T.81 Table D.3) and the conditioning models of Annex F.1.4.4
 are long numeric tables; this container has no reference arithmetic
@@ -32,7 +31,7 @@ JPEG codec (no Pillow/libjpeg, and mainstream libjpeg builds
 historically reject arithmetic anyway), so an in-engine implementation
 could only be round-trip-tested against itself — a wrong state table
 round-trips perfectly and ships silent corruption on wild streams,
-exactly the unvalidatable-table risk that gated CAVLC. Baseline,
+the risk of any entropy coder built without a reference decoder. Baseline,
 progressive, and lossless JPEG never had this problem: their Annex K
 tables are exercised against independently-constructed fixtures and
 bit-exact DPCM round trips. (2) Corpus statistics: arithmetic JPEG is

@@ -48,12 +48,8 @@ def encode_mp4(
     height: int,
     fps: int = 24,
     codec: bytes = b"raw ",
-    extradata: bytes | None = None,
 ) -> bytes:
-    """Write frames as one-sample-per-frame single-chunk mp4.
-    ``extradata``, when given with an avc1 codec, is the
-    AVCDecoderConfigurationRecord muxed as the sample entry's avcC
-    child box (out-of-band SPS/PPS, AVCC length-prefixed samples)."""
+    """Write frames as one-sample-per-frame single-chunk mp4."""
     timescale = fps * 1000
     delta = 1000
     duration = delta * len(frames)
@@ -95,8 +91,7 @@ def encode_mp4(
         + b"\x00" * 4
         + struct.pack(">H", 1)          # frame_count
         + b"\x00" * 32                   # compressorname
-        + struct.pack(">Hh", 0x0018, -1)
-        + (_box(b"avcC", extradata) if extradata else b""),
+        + struct.pack(">Hh", 0x0018, -1),
     )
     stsd = _full(b"stsd", 0, 0, struct.pack(">I", 1) + sample_entry)
     stts = _full(b"stts", 0, 0, struct.pack(">III", 1, len(frames), delta))
@@ -233,21 +228,3 @@ def extract_samples(buf: bytes) -> list[bytes]:
             si += 1
     return out
 
-
-def extract_avcc(buf: bytes) -> bytes | None:
-    """Return the AVCDecoderConfigurationRecord payload from the
-    track's avc1 sample entry (the out-of-band SPS/PPS an AVCC-framed
-    mp4 carries), or None when the track has no avcC box."""
-    tree = parse_boxes(buf)
-    stbl = _find(tree, [b"moov", b"trak", b"mdia", b"minf", b"stbl"])
-    if stbl is None:
-        return None
-    stsd = _find(stbl["children"], [b"stsd"])
-    if stsd is None:
-        return None
-    start, end = stsd["offset"], stsd["offset"] + stsd["size"]
-    i = buf.find(b"avcC", start, end)
-    if i < 0:
-        return None
-    (size,) = struct.unpack(">I", buf[i - 4 : i])
-    return buf[i + 4 : i - 4 + size]

@@ -21,12 +21,13 @@ types 0/2/4/6 at bit depth 8, non-interlaced), and baseline JPEG
 (``operators/jpeg.py`` — full T.81 baseline sequential: quality-scaled
 Annex K quantization, canonical Huffman, 4:4:4 and 4:2:0 sampling,
 restart-marker-aware decode); the synthetic media table emits genuine
-container bytes for all four. The one remaining gate is mp4/H.264
-(container + CABAC entropy decode — far beyond pure-numpy scope), so
-video payloads stay a clearly-marked raw-frame fake behind the PIL
-import gate. The Spark-side contract — schemas, UDF signatures, Arrow
-batch iteration, explode shapes, partition behavior — is identical
-across real and stubbed codecs.
+container bytes for all four. The mp4 container parses for real
+(``operators/mp4.py``); the one remaining gate is H.264 entropy
+decode, far beyond pure-numpy scope, which PyAV does when installed.
+Synthetic video payloads stay a clearly-marked raw-frame fake. The
+Spark-side contract — schemas, UDF signatures, Arrow batch iteration,
+explode shapes, partition behavior — is identical across real and
+stubbed codecs.
 """
 
 from __future__ import annotations
@@ -408,14 +409,27 @@ def _decode_video_av(
     return frames
 
 
+def _video_codec_gate(codec: str) -> NotImplementedError:
+    """The one gate for compressed video payloads (H.264 and any other
+    non-raw codec): entropy decode needs an external library."""
+    return NotImplementedError(
+        f"video codec {codec!r} needs an external decoder "
+        "(install PyAV, import name 'av', to enable it)"
+    )
+
+
 def _decode_bytes(content: bytes, fmt: str) -> np.ndarray:
     """Decode media bytes to a pixel/sample array.
 
     ``ppm``/``pgm``, ``png``, ``jpeg``, and ``wav`` decode for real
     (pure numpy+stdlib — jpeg via operators/jpeg.py baseline T.81).
-    ``fake`` is raw uint8 (video frame payloads). Formats needing real
-    codec libraries (mp4/h264), absent here, raise to make the missing
-    dependency explicit rather than silently wrong."""
+    ``fake`` is raw uint8 (video frame payloads). ``mp4`` parses its
+    container for real (operators/mp4.py): raw-codec and zero-sample
+    tracks return their joined sample bytes, and compressed samples
+    decode through PyAV when it is installed. H.264 has one gate: a
+    bare ``h264``/``avc`` stream, or compressed mp4 samples without
+    PyAV, raise ``NotImplementedError`` naming the codec and PyAV,
+    rather than returning something silently wrong."""
     if fmt in ("ppm", "pgm"):
         return decode_ppm(bytes(content))
     if fmt == "png":
@@ -430,63 +444,19 @@ def _decode_bytes(content: bytes, fmt: str) -> np.ndarray:
     if fmt == "fake":
         return np.frombuffer(content, dtype=np.uint8)
     if fmt in ("h264", "avc"):
-        # Annex-B elementary stream: the in-engine layer decodes
-        # I_PCM IDR frames bit-exactly; predicted macroblocks raise
-        # the documented CAVLC/CABAC gate (operators/h264.py module
-        # docstring records the decision + rationale).
-        from cds_etl_spark.operators.h264 import decode_h264
-
-        return decode_h264(bytes(content))
+        raise _video_codec_gate(fmt)
     if fmt == "mp4":
-        # Container parses for real (operators/mp4.py); whether the
-        # sample payloads decode depends on the declared codec.
         from cds_etl_spark.operators.mp4 import extract_samples, probe_mp4
 
         info = probe_mp4(bytes(content))
-        if info["codec"] == "raw":
+        if info["codec"] == "raw" or info["n_samples"] == 0:
             return np.frombuffer(
                 b"".join(extract_samples(bytes(content))), dtype=np.uint8
             )
         frames = _decode_video_av(bytes(content))
         if frames is not None:
             return np.stack(frames) if frames else np.zeros((0,), np.uint8)
-        if info["codec"] in ("avc1", "h264"):
-            # In-engine fallback: avcC out-of-band SPS/PPS + AVCC
-            # samples → Annex-B → the I_PCM subset decoder
-            # (operators/h264.py); real-codec frames raise its
-            # documented CAVLC/CABAC gate.
-            from cds_etl_spark.operators.h264 import (
-                avcc_config_to_annexb,
-                avcc_to_annexb,
-                decode_h264,
-            )
-            from cds_etl_spark.operators.mp4 import extract_avcc
-
-            record = extract_avcc(bytes(content))
-            if not record:
-                # No out-of-band parameter sets: payloads can't be
-                # framed — this is the codec gate, not a parse bug
-                # (r9 ADVICE: was a bare 'slice before SPS/PPS').
-                raise NotImplementedError(
-                    "avc1 track has no avcC parameter sets — needs an "
-                    "external decoder (install PyAV, import name 'av')"
-                )
-            prefix, nls = avcc_config_to_annexb(record)
-            samples = extract_samples(bytes(content))
-            decoded = [
-                decode_h264(prefix + avcc_to_annexb(s, nls))
-                for s in samples
-            ]
-            # Zero-sample track: match the raw-codec branch's empty
-            # array instead of np.stack's bare ValueError (r9 ADVICE).
-            return (
-                np.stack(decoded) if decoded else np.zeros((0,), np.uint8)
-            )
-        raise NotImplementedError(
-            f"mp4 codec {info['codec']!r} needs an external decoder "
-            "(container parsed fine; H.264/H.265 entropy decode is "
-            "gated — install PyAV, import name 'av', to enable it)"
-        )
+        raise _video_codec_gate(info["codec"])
     if _HAVE_PIL:
         raise NotImplementedError("real decoder wiring reserved for PIL builds")
     raise NotImplementedError(

@@ -24,9 +24,12 @@ scan — and the positional ops add the parent's expression for a column
 to the child's projection: one `select` per node, correct under any
 partitioning, with no join and no row identity to keep stable.
 
-`with_row_id` remains for the flows whose frames come from DIFFERENT
-scans: the v1.2 sheets, the v1.0 workbooks and `reshape.zip_frames`
-carry an explicit `_row_id` and align by equi-join on it.
+The v1.2 sheets are one scan per node, so their same-sheet copies are
+projections too; v1.2 stamps `with_row_id` only on its mapping sheet,
+whose row order ranks `first_match_lookup`'s first match. The flows
+whose frames come from DIFFERENT scans, the v1.0 workbooks and
+`reshape.zip_frames`, carry an explicit `_row_id` and align by
+equi-join on it.
 """
 
 from __future__ import annotations

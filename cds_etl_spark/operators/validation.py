@@ -33,6 +33,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from cds_etl_spark.operators.pin import cut_lineage
 
@@ -115,15 +116,29 @@ def _distinct_incl_null(col: str) -> F.Column:
     return F.countDistinct(_bt(col)) + F.max(F.when(_bt(col).isNull(), 1).otherwise(0))
 
 
+def _literal_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A frame of literal ``rows`` typed by the DDL ``schema``, built in
+    the JVM: `inline` of one array of structs over a one-row range.
+    Unlike `createDataFrame`, whose Python-side scan starts a Python
+    worker in the job that reads it, its plan has no Python leaf. No
+    rows gives an empty frame of the schema."""
+    struct_type = StructType.fromDDL(schema)
+    structs = [
+        F.struct(*[F.lit(v).alias(f.name) for v, f in zip(row, struct_type.fields)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(ArrayType(struct_type)))
+    )
+
+
 def _report(spark, blocks: list[DataFrame], schema: str) -> DataFrame:
     """One report from per-node blocks tagged ``_node`` (node-loop
     position): a single partition, sorted by (``_node``, ``ID``) inside
     it, so the TSV bytes are the same on every run without the range
-    sampling job of a global sort. The empty frame is built only when
-    there is no block: it is a Python-side scan, and reading it starts
-    a Python worker in the report's write job."""
+    sampling job of a global sort."""
     if not blocks:
-        return spark.createDataFrame([], schema)
+        return _literal_frame(spark, [], schema)
     return (
         reduce(DataFrame.unionByName, blocks)
         .coalesce(1)
@@ -306,8 +321,8 @@ def ui_validation(
             elif prop not in UI_NO_FILL_PROPS:
                 df = df.withColumn(prop, F.coalesce(_bt(prop), F.lit(NOT_SPECIFIED)))
         tables[node] = df
-    report = spark.createDataFrame(
-        report_rows, "Missing_Properties string, UI_Related boolean, Raw_Data_File string"
+    report = _literal_frame(
+        spark, report_rows, "Missing_Properties string, UI_Related boolean, Raw_Data_File string"
     )
     return tables, report
 

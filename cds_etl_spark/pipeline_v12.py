@@ -24,9 +24,11 @@ Engine re-expression notes (semantics preserved, physics changed):
 * The reference's ``random.sample`` file-id fallback is
   ``synthetic_file_id``'s deterministic xxhash64 over the natural key:
   idempotent re-runs, no driver-side RNG state (keys.py:113).
-* Row-positional column copies (diagnosis participant_id) ride the
-  ``_row_id`` stamped on each sheet scan, making them equi-joins that
-  stay correct under any partitioning.
+* Same-sheet column copies (the File sheet's GUID, the Diagnosis
+  sheet's ``participant_id``) are column expressions added to the
+  node's ``NodeProjection`` over its sheet scan: one ``select``, no
+  join and no row identity. Only the mapping sheet is stamped with
+  ``_row_id``, the sheet order ``first_match_lookup`` ranks by.
 
 Reference quirks mirrored deliberately (documented, not "fixed"
 silently, so outputs stay comparable):
@@ -55,7 +57,6 @@ from pyspark.sql import functions as F
 from cds_etl_spark.model import Model
 from cds_etl_spark.operators import (
     clean_data,
-    drop_internal,
     extract_node,
     normalize_strings,
     with_row_id,
@@ -119,53 +120,56 @@ class CdsPipelineV12:
         self._cached = []
 
     def run(self, sheets: dict[str, DataFrame]) -> NodeTables:
-        # O3/O4 normalize + row identity per sheet. Cached: the row ids
-        # feed alignment joins and must survive recomputation.
-        src = {
-            name: with_row_id(normalize_strings(df)).cache()
-            for name, df in sheets.items()
-            if name in SHEET_NODES or name == MAPPING_SHEET
-        }
+        # O3/O4 normalize per sheet, cached: every sheet feeds several
+        # guards and projections. The mapping sheet's row ids rank its
+        # first matches, so they must survive recomputation.
+        src: dict[str, DataFrame] = {}
+        for name, df in sheets.items():
+            if name in SHEET_NODES or name == MAPPING_SHEET:
+                df = normalize_strings(df)
+                src[name] = (with_row_id(df) if name == MAPPING_SHEET else df).cache()
         self._cached.extend(src.values())
 
         # O6 projection, sheet-scoped (v1.3 projects one denormalized
         # scan; v1.2 has one sheet per node).
-        tables: NodeTables = {}
-        for sheet, node in SHEET_NODES.items():
-            if sheet in src:
-                counts = mapped_non_null_counts(src[sheet], self.raw_dict, [node])
-                tables[node] = extract_node(
-                    src[sheet], self.model, node, self.raw_dict, counts
-                ).frame()
+        nodes = {
+            node: extract_node(
+                src[sheet], self.model, node, self.raw_dict,
+                mapped_non_null_counts(src[sheet], self.raw_dict, [node]),
+            )
+            for sheet, node in SHEET_NODES.items()
+            if sheet in src
+        }
 
-        # file_id fallback (:66-73): GUID/guid column from the raw
-        # sheet, else a synthetic id. The raw GUID rides the row id.
-        file_df = tables.get("file")
-        if file_df is not None and "File" in src and file_df.columns != ["type"]:
-            if "file_id" not in file_df.columns:
-                raw = src["File"]
-                guid_col = next((c for c in ("GUID", "guid") if c in raw.columns), None)
-                if guid_col is not None:
-                    file_df = file_df.join(
-                        raw.select(ROW_ID, F.col(guid_col).alias("_guid")), ROW_ID
-                    )
-                tables["file"] = synthetic_file_id(
-                    file_df, id_col="file_id",
-                    guid_col="_guid" if guid_col else None,
-                ).drop("_guid")
+        # file_id fallback (:66-73): the File sheet's GUID/guid column,
+        # else a synthetic id.
+        file_node = nodes.get("file")
+        fill_file_id = (
+            file_node is not None
+            and list(file_node.columns) != ["type"]
+            and "file_id" not in file_node.columns
+        )
+        guid_col = None
+        if fill_file_id:
+            guid_col = next((c for c in ("GUID", "guid") if c in src["File"].columns), None)
+            if guid_col is not None:
+                nodes["file"] = file_node.with_column("_guid", F.col(f"`{guid_col}`"))
 
         # diagnosis → participant by row (:158-160).
-        diag = tables.get("diagnosis")
-        if diag is not None and "Diagnosis (opt)" in src:
+        diag = nodes.get("diagnosis")
+        if diag is not None:
             raw = src["Diagnosis (opt)"]
             if "participant_id" in raw.columns and not _all_null(raw, "participant_id"):
-                tables["diagnosis"] = diag.join(
-                    raw.select(
-                        ROW_ID, F.col("participant_id").alias("participant.participant_id")
-                    ),
-                    ROW_ID,
-                    "left",
+                nodes["diagnosis"] = diag.with_column(
+                    "participant.participant_id", F.col("participant_id")
                 )
+
+        tables: NodeTables = {node: proj.frame() for node, proj in nodes.items()}
+        if fill_file_id:
+            tables["file"] = synthetic_file_id(
+                tables["file"], id_col="file_id",
+                guid_col="_guid" if guid_col else None,
+            ).drop("_guid")
 
         # participant → study: single-row Study replicated (:161-166).
         study, part = tables.get("study"), tables.get("participant")
@@ -210,8 +214,7 @@ class CdsPipelineV12:
                     order_col=ROW_ID,
                 )
 
-        tables = clean_data(tables, self.model, self.clean_dict)  # O19
-        return {node: drop_internal(df) for node, df in tables.items()}
+        return clean_data(tables, self.model, self.clean_dict)  # O19
 
     def study_prefix(self, tables: NodeTables) -> str:
         """Output-file prefix: the study's phs_accession (:197)."""

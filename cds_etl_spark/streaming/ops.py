@@ -377,7 +377,7 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
     (same boundary policy as the PIL-gated jpeg path).
 
     The protobuf-absence decision (r14, recorded PERMANENT
-    environment gate — same rigor as the jpeg/h264 codec gates):
+    environment gate — same rigor as the jpeg and PyAV codec gates):
     this container ships no protobuf wheel and has no package-index
     route (``pip download protobuf`` → name resolution failure), and
     vendoring a third-party runtime wholesale is out of policy, so

@@ -180,6 +180,22 @@ def test_v12_synthetic_file_id_is_deterministic(workdir, spark):
     assert first == second
 
 
+def test_v12_diagnosis_without_mapped_data_is_skipped(workdir, spark):
+    # No mapped diagnosis property has data, so the node projects to an
+    # empty table. Its participant_id copy must ride that projection
+    # without failing the run, and the sink writes no file.
+    book = workdir / "raw" / "batchA" / "submission.book"
+    _write_tsv(
+        book / "Diagnosis (opt).tsv",
+        ["participant_id", "age_at_diagnosis"],
+        [("P1", ""), ("P2", "")],
+    )
+    _run(workdir, spark)
+    out = workdir / "out" / "batchA"
+    assert not (out / "phs77-diagnosis.tsv").exists()
+    assert len(_read_tsv(out / "phs77-participant.tsv")) == 2
+
+
 def test_v12_extract_dictionary_mode(workdir, spark):
     (workdir / "raw_dict.yaml").unlink()
     _run(workdir, spark, "--extract_raw_data_dictionary")

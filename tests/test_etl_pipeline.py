@@ -238,6 +238,22 @@ def test_reports(result):
     assert any(r["Missing_Properties"] == "participant.ethnicity" for r in ui)
 
 
+def test_reports_have_no_python_side_scan(result, spark):
+    """The Properties report, and a report with no node block, are built
+    from JVM rows: no leaf of their optimized plans is a `LogicalRDD`,
+    the Python-side scan that would start a Python worker in the
+    report's write job."""
+    from cds_etl_spark.operators.validation import _report
+
+    empty = _report(spark, [], "`node name` string, ID string, `conflict property` string")
+    assert empty.columns == ["node name", "ID", "conflict property"]
+    assert empty.count() == 0
+    for df in (result.ui_report, empty):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        assert "LogicalRDD" not in names, names
+
+
 def test_projection_stage_has_no_joins(spark):
     """Secondary ids, combined keys and parent FKs are column
     expressions over the one ingest scan: every node table leaving the

@@ -580,8 +580,8 @@ def test_mp4_container_roundtrip_and_structure():
 
 def test_mp4_h264_codec_raises_but_container_parses():
     # Garbage avc1 payloads still parse at the container layer; the
-    # in-engine H.264 fallback (operators/h264.py) then fails loudly
-    # on the non-stream bytes instead of returning silent garbage.
+    # decode then fails loudly (the PyAV gate, or PyAV's own error on
+    # the non-stream bytes) instead of returning silent garbage.
     from cds_etl_spark.operators.mp4 import encode_mp4, probe_mp4
 
     buf = encode_mp4([b"\x00\x01\x02"], 2, 2, codec=b"avc1")
@@ -608,65 +608,55 @@ def test_mp4_sample_frames_container_level(spark):
     assert got == {0: frames[0], 4: frames[4], 8: frames[8]}
 
 
-def test_h264_gate_names_the_optional_decoder():
-    # Without PyAV the gate must stay an explicit NotImplementedError
-    # that tells the operator how to enable real decode.
+# One AVCC-framed IDR slice NAL: a 4-byte length, then the NAL.
+_AVC1_SAMPLE = (4).to_bytes(4, "big") + b"\x65\x00\x00\x00"
+
+
+@pytest.mark.parametrize(
+    "fmt, frames",
+    [("h264", None), ("mp4", [_AVC1_SAMPLE]), ("mp4", [])],
+    ids=["annexb_stream", "avc1_samples", "avc1_zero_samples"],
+)
+def test_h264_gate_names_pyav(fmt, frames):
+    # Every H.264 payload meets one gate: a bare Annex-B stream, and
+    # avc1 mp4 samples where PyAV is absent, raise NotImplementedError
+    # naming PyAV. A zero-sample track has nothing to decode and
+    # returns the raw-codec branch's empty uint8 array.
     import importlib.util
 
     from cds_etl_spark.operators.mp4 import encode_mp4
     from cds_etl_spark.operators.multimodal import _decode_video_av
 
-    buf = encode_mp4([b"\x00\x01\x02"], 2, 2, codec=b"avc1")
-    if importlib.util.find_spec("av") is None:
-        assert _decode_video_av(buf) is None
-        # Real-codec (non-I_PCM) frames surface the documented gate
-        # from the in-engine decoder; this garbage payload has no
-        # slice NAL at all, so it fails at the bitstream layer.
-        with pytest.raises((ValueError, NotImplementedError)):
-            _decode_bytes(buf, "mp4")
-        from cds_etl_spark.operators.h264 import decode_h264
-
-        with pytest.raises(NotImplementedError, match="PyAV|CAVLC"):
-            # A REAL stream whose mb_type needs entropy decode names
-            # the PyAV escape hatch (asserted structurally in
-            # tests/test_h264.py::test_entropy_decode_gate_is_explicit).
-            from cds_etl_spark.operators.h264 import (
-                _BitWriter,
-                _nal,
-                build_pps,
-                build_sps,
-            )
-
-            bw = _BitWriter()
-            for op, v in [("ue", 0), ("ue", 7), ("ue", 0)]:
-                getattr(bw, op)(v)
-            bw.u(0, 4)
-            bw.ue(0)
-            bw.u(0, 1)
-            bw.u(0, 1)
-            bw.se(0)
-            bw.ue(1)
-            bw.ue(0)  # I_4x4 -> gate
-            bw.rbsp_trailing()
-            decode_h264(
-                _nal(7, build_sps(16, 16))
-                + _nal(8, build_pps())
-                + _nal(5, bw.tobytes())
-            )
+    if frames is None:
+        content = b"\x00\x00\x00\x01" + _AVC1_SAMPLE[4:]
+    else:
+        content = encode_mp4(frames, 16, 16, codec=b"avc1")
+    if frames == []:
+        got = _decode_bytes(content, fmt)
+        assert got.shape == (0,) and got.dtype == np.uint8
+    elif fmt == "h264" or importlib.util.find_spec("av") is None:
+        if fmt == "mp4":
+            assert _decode_video_av(content) is None
+        with pytest.raises(NotImplementedError, match="PyAV"):
+            _decode_bytes(content, fmt)
     else:  # pragma: no cover - environment-dependent branch
         # With PyAV present the gate must NOT fire (decode errors on
         # this synthetic payload are allowed to surface as av errors).
-        assert _decode_video_av is not None
+        try:
+            _decode_bytes(content, fmt)
+        except NotImplementedError:
+            pytest.fail("PyAV is installed, yet the codec gate fired")
+        except Exception:
+            pass
 
 
 def test_h264_decodes_end_to_end_with_pyav(spark):
     # Two-branch environment gate (r14: zero silent skips). Where PyAV
-    # is absent — the recorded permanent defer for CAVLC/CABAC slice
-    # data (h264.py module docstring; no av wheel, no network) — pin
-    # that the optional decoder hook is genuinely unwired, so the
-    # NotImplementedError gate (exercised by the test above) is the
-    # only path. In PyAV environments: encode real H.264 with av, ship
-    # it through sample_frames, get RGB pixel frames end-to-end.
+    # is absent, pin that the optional decoder hook is genuinely
+    # unwired, so the NotImplementedError gate (exercised by the test
+    # above) is the only path. In PyAV environments: encode real H.264
+    # with av, ship it through sample_frames, get RGB pixel frames
+    # end-to-end.
     try:
         import av
     except ImportError:
@@ -757,34 +747,10 @@ def test_jpeg_lossless_stream_structure():
     assert (prec, h, w, nc) == (8, 6, 8, 1)
 
 
-def test_mp4_avc1_empty_and_missing_avcc_edges():
-    # r9 ADVICE: a zero-sample avc1 track must return the raw-codec
-    # branch's empty array (np.stack raised a bare ValueError), and a
-    # missing avcC record must surface the documented codec gate, not
-    # a generic 'slice before SPS/PPS' parse error.
-    from cds_etl_spark.operators.h264 import (
-        build_avcc_config,
-        build_pps,
-        build_sps,
-    )
-    from cds_etl_spark.operators.mp4 import encode_mp4
-    from cds_etl_spark.operators.multimodal import _decode_bytes
-
-    record = build_avcc_config(build_sps(16, 16), build_pps())
-    empty = encode_mp4([], 16, 16, codec=b"avc1", extradata=record)
-    got = _decode_bytes(empty, "mp4")
-    assert got.shape == (0,) and got.dtype == np.uint8
-
-    sample = (4).to_bytes(4, "big") + b"\x65\x00\x00\x00"
-    no_cfg = encode_mp4([sample], 16, 16, codec=b"avc1")
-    with pytest.raises(NotImplementedError, match="avcC|PyAV"):
-        _decode_bytes(no_cfg, "mp4")
-
-
 def test_jpeg_arithmetic_and_hierarchical_gate_is_explicit():
     # r10 decision record (jpeg.py module docstring): SOF9-11 /
     # SOF5-7 are a PERMANENT defer — the gate must name the defer and
-    # the external escape hatch, mirroring the h264 CAVLC gate test.
+    # the external escape hatch, mirroring the H.264 PyAV gate test.
     import struct
 
     from cds_etl_spark.operators.jpeg import decode_jpeg

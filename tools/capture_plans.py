@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Capture ``explain("formatted")`` output for queries into files —
-the r15 optimization round's plan evidence (plans/r15/<q>_{before,after}.txt).
+"""Capture ``explain("formatted")`` output for queries into files:
+one ``<out_dir>/<query>_<suffix>.txt`` per query, with ``out_dir``
+created if missing (e.g. suffixes ``before``/``after`` around a change).
 
 Usage:
     python tools/capture_plans.py <sf_dir> <out_dir> <suffix> [names...]
