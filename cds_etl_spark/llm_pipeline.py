@@ -77,8 +77,11 @@ def prepare_training_data(
     chunk_budget: int = 256,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns every intermediate stage keyed by
-    name (all lazy): ``filtered``, ``deduped``, ``clustered``,
-    ``clean``, ``manifest``.
+    name: ``filtered``, ``deduped``, ``clustered``, ``clean``,
+    ``manifest``. Building them is not lazy: the stage pins and the
+    connected-components rounds run Spark jobs before this returns
+    (38 of a 3000-document run's 44 jobs); the returned frames are
+    lazy over those pins.
 
     ``probe`` is the held-out benchmark set to decontaminate against
     (skipped when None). ``manifest`` is one row per (doc, chunk):

@@ -44,6 +44,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cds_etl_spark.operators.frames import literal_frame
+
 NodeTables = dict[str, DataFrame]
 
 STATE_SCHEMA = "key string, value string"
@@ -104,7 +106,7 @@ def _read_state(spark: SparkSession, path: str) -> DataFrame:
     latest = _latest_gen(path)
     if latest is not None:
         return spark.read.parquet(latest)
-    return spark.createDataFrame([], STATE_SCHEMA)
+    return literal_frame(spark, [], STATE_SCHEMA)
 
 
 def add_historical_value(

@@ -50,9 +50,11 @@ table is safe to pin the way it is pinned.
 ``"iterative"``
     The per-round frame of a fixpoint loop (connected components,
     label propagation, pagerank, BPE merges), and ID validation's one
-    cut per node: its deduped frame, which the cascades of the nodes
-    judged after it keep re-deriving. Caching is NOT enough here: the *logical plan* doubles per round and
-    analysis itself stalls, so the plan must be truncated —
+    cut per node: its deduped frame annotated with the id verdicts,
+    which the node table, the failure ids, both reports and the
+    cascades of the nodes judged after it all read. Caching is NOT
+    enough here: the *logical plan* doubles per round and analysis
+    itself stalls, so the plan must be truncated —
     :func:`cut_lineage`, always.
 
 Scale note: nothing here is tuned to the local fixture. A production

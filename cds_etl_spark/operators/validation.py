@@ -4,16 +4,21 @@ PII scan, UI completeness (O22-O27).
 Reference: `id_validation` (cds_transformation_functions.py:209-281),
 `delete_children` (:178-195), `ssn_validation` (:284-299),
 `ui_validation` (:303-344). Everything here is formulated as LAZY
-DataFrame algebra — bad-id sets are DataFrames flowing into broadcast
-anti-joins, never collected lists, so the same code path works when a
-node table is 10^9 rows and the bad set is 10^6.
+DataFrame algebra — bad-id sets are DataFrames flowing into filters
+and broadcast joins, never collected lists, so the same code path
+works when a node table is 10^9 rows and the bad set is 10^6.
 
-ID validation judges each node once: one `groupBy(id)` gives every id
-its orphan flag, row count and conflict list, and the orphan ids O and
-the non-exempt duplicate ids B are deleted together behind one guard.
-The reference cascades O and then B; one cascade of O ∪ B removes the
-same rows, because FK nulling only adds nulls, the all-null drop is
-idempotent, and B is judged per id, so deleting O first cannot change it.
+ID validation makes one pinned pass per node: its id-non-null rows are
+hash-partitioned by the id, so the full-row dedup and one id window run
+without a further shuffle. The window gives every row its id's orphan
+flag, conflict list and bad flag, and marks one representative row per
+id; the emptiness guard is an observed metric of the same cut. The node
+table, the bad ids and both reports are filters of that cut. The
+orphan ids O and the non-exempt duplicate ids B are deleted together
+behind the one guard. The reference cascades O and then B; one cascade
+of O ∪ B removes the same rows, because FK nulling only adds nulls, the
+all-null drop is idempotent, and B is judged per id, so deleting O
+first cannot change it.
 
 Deliberate deviations from reference *implementation* (same intended
 semantics, documented for the parity check):
@@ -31,13 +36,12 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
-
-from cds_etl_spark.operators.pin import cut_lineage
 
 from cds_etl_spark.model import Model
+from cds_etl_spark.operators.frames import literal_frame
+from cds_etl_spark.operators.pin import cut_lineage
 
 NodeTables = dict[str, DataFrame]
 
@@ -110,35 +114,13 @@ def cascade_delete(
     return tables
 
 
-def _distinct_incl_null(col: str) -> F.Column:
-    """Distinct value count where all NULLs collapse to one value —
-    pandas `set(list(...))` semantics at :259."""
-    return F.countDistinct(_bt(col)) + F.max(F.when(_bt(col).isNull(), 1).otherwise(0))
-
-
-def _literal_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """A frame of literal ``rows`` typed by the DDL ``schema``, built in
-    the JVM: `inline` of one array of structs over a one-row range.
-    Unlike `createDataFrame`, whose Python-side scan starts a Python
-    worker in the job that reads it, its plan has no Python leaf. No
-    rows gives an empty frame of the schema."""
-    struct_type = StructType.fromDDL(schema)
-    structs = [
-        F.struct(*[F.lit(v).alias(f.name) for v, f in zip(row, struct_type.fields)])
-        for row in rows
-    ]
-    return spark.range(0, 1, 1, 1).select(
-        F.inline(F.array(*structs).cast(ArrayType(struct_type)))
-    )
-
-
 def _report(spark, blocks: list[DataFrame], schema: str) -> DataFrame:
     """One report from per-node blocks tagged ``_node`` (node-loop
     position): a single partition, sorted by (``_node``, ``ID``) inside
     it, so the TSV bytes are the same on every run without the range
     sampling job of a global sort."""
     if not blocks:
-        return _literal_frame(spark, [], schema)
+        return literal_frame(spark, [], schema)
     return (
         reduce(DataFrame.unionByName, blocks)
         .coalesce(1)
@@ -155,14 +137,22 @@ def id_validation(
     raw_data_name: str = "",
 ) -> tuple[NodeTables, DataFrame, DataFrame]:
     """Duplicate-ID/conflict detection + orphan detection + cascades
-    (reference `id_validation`, :209-281), one verdict per node.
+    (reference `id_validation`, :209-281), one pinned pass per node.
 
-    One aggregate per id gives its orphan flag (:222-246), row count and
-    conflict list (:247-277); the bad set is pinned once, and both
-    reports are filters of it. Returns (cleaned tables, id_report,
-    parent_report); reports match the reference's TSV schemas
-    (:210-211) with the conflict-column list rendered as its Python
-    repr, each node's block sorted by ID."""
+    The node's rows are deduped (:218-219) and annotated by one window
+    over the id: the orphan flag (:222-246), the conflict list
+    (:247-277), the bad flag and a one-row-per-id representative flag.
+    That annotated frame is the node's only `cut_lineage`, and the job
+    that pins it also delivers the emptiness guard as an observed
+    `max` of the bad flag (a `max`, not a count, so a cut that runs its
+    plan twice reports the same value). The cleaned node table is the
+    cut's good rows; the bad ids and both reports are its bad
+    representatives. The bad flag needs no row-count test: an id has
+    more than one row exactly when its conflict list is non-empty,
+    because two distinct rows with one id differ in some column. Returns (cleaned
+    tables, id_report, parent_report); reports match the reference's
+    TSV schemas (:210-211) with the conflict-column list rendered as
+    its Python repr, each node's block sorted by ID."""
     tables = dict(tables)
     spark = next(iter(tables.values())).sparkSession if tables else None
     id_reports: list[DataFrame] = []
@@ -173,16 +163,11 @@ def id_validation(
             continue
         id_col = node_id_field[node]
         df = tables[node]
-        if id_col not in df.columns:
+        cols = df.columns
+        if id_col not in cols:
             continue
-        # :218-219 — full-row dedup, then require an id.
-        df = cut_lineage(df.dropDuplicates().filter(_bt(id_col).isNotNull()))  # pin: iterative
-        tables[node] = df
-        data_cols = [c for c in df.columns if c != id_col]
-        if not data_cols:  # one row per id after the dedup: nothing to judge
-            continue
-
-        fk_cols = _fk_cols(node, parent_mapping, df.columns)
+        data_cols = [c for c in cols if c != id_col]
+        fk_cols = _fk_cols(node, parent_mapping, cols)
         node_muls = {
             model.mul_of(rule.get("relationship", ""))
             for rule in parent_mapping
@@ -190,25 +175,33 @@ def id_validation(
         }
         has_m2m = "many_to_many" in node_muls
 
+        # :218-219 — require an id, then the full-row dedup, which the
+        # id partitioning already clusters.
+        df = df.filter(_bt(id_col).isNotNull()).repartition(_bt(id_col)).dropDuplicates()
+        # Ordering by every column makes the representative row and the
+        # row order within a partition the same on every run.
+        by_id = Window.partitionBy(_bt(id_col)).orderBy(*[_bt(c) for c in cols])
+        per_id = by_id.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         # Orphan (:238): EVERY parent-FK column has a null occurrence.
         orphan = (
-            reduce(lambda a, b: a & b, [F.max(_bt(fk).isNull()) for fk in fk_cols])
+            reduce(lambda a, b: a & b, [F.max(_bt(fk).isNull()).over(per_id) for fk in fk_cols])
             if fk_cols
             else F.lit(False)
         )
-        verdict = df.groupBy(_bt(id_col).alias("_vid")).agg(
-            orphan.alias("_orphan"),
-            F.count(F.lit(1)).alias("_n"),
-            *[_distinct_incl_null(c).alias(f"_d{i}") for i, c in enumerate(data_cols)],
-        )
-        conflicts = F.filter(
-            F.array(*[F.when(F.col(f"_d{i}") > 1, F.lit(c)) for i, c in enumerate(data_cols)]),
+        # A column conflicts when the id's rows hold more than one
+        # value of it, null counting as a value (pandas `set(list(...))`
+        # at :259). Wrapped in a struct, a null orders and compares like
+        # any other value, so the id's least and greatest values differ.
+        def conflicts(c: str) -> F.Column:
+            value = F.struct(_bt(c))
+            return F.min(value).over(per_id) != F.max(value).over(per_id)
+
+        conf = F.filter(
+            F.array(*[F.when(conflicts(c), F.lit(c)) for c in data_cols]).cast("array<string>"),
             lambda x: x.isNotNull(),
         )
-        verdict = verdict.select("_vid", "_orphan", "_n", conflicts.alias("_conf"))
         # many_to_many exemption (:264): sole conflict is a parent FK
-        # column (not one of the node's own model properties). An id
-        # seen once has an empty list, hence try_element_at.
+        # column (not one of the node's own model properties).
         own_props = list(model.nodes.get(node, []))
         exempt = (
             (F.size(F.col("_conf")) == 1)
@@ -216,24 +209,30 @@ def id_validation(
             if has_m2m
             else F.lit(False)
         )
-        # pin: corpus — the failure-id list feeds the guard, the
-        # anti-join, the cascade and both reports.
-        bad = cut_lineage(
-            verdict.filter(F.col("_orphan") | ((F.col("_n") > 1) & ~exempt)).drop("_n")
-        )
+        annotated = df.select(
+            "*",
+            orphan.alias("_orphan"),
+            conf.alias("_conf"),
+            (F.row_number().over(by_id) == 1).alias("_rep"),
+        ).withColumn("_bad", F.col("_orphan") | ((F.size(F.col("_conf")) > 0) & ~exempt))
+        seen = Observation()
+        # pin: iterative — the cleaned table, the failure ids, the
+        # cascade and both reports all read this one cut.
+        cut = cut_lineage(annotated.observe(seen, F.max("_bad").alias("any_bad")))
+        tables[node] = cut.filter(~F.col("_bad")).select(*[_bt(c) for c in cols])
+        bad = cut.filter(F.col("_rep") & F.col("_bad"))
         # The reference cascades only a NON-empty delete list (:244,
         # :271); an unconditional call would still drop all-null-FK
         # descendants (delete_children's dropna :193).
-        if not bad.isEmpty():
-            bad_ids = bad.select("_vid")
-            tables[node] = df.join(F.broadcast(bad_ids), _bt(id_col) == F.col("_vid"), "left_anti")
+        if seen.get["any_bad"]:
+            bad_ids = bad.select(_bt(id_col).alias("_vid"))
             tables = cascade_delete(tables, parent_mapping, node_id_field, bad_ids, node)
         if fk_cols:
             parent_reports.append(
                 bad.filter(F.col("_orphan")).select(
                     F.lit(pos).alias("_node"),
                     F.lit(node).alias("node name"),
-                    F.col("_vid").cast("string").alias("ID"),
+                    _bt(id_col).cast("string").alias("ID"),
                     F.lit(fk_cols[-1]).alias("parent ID field"),
                 )
             )
@@ -241,7 +240,7 @@ def id_validation(
             bad.filter(~F.col("_orphan")).select(
                 F.lit(pos).alias("_node"),
                 F.lit(node).alias("node name"),
-                F.col("_vid").cast("string").alias("ID"),
+                _bt(id_col).cast("string").alias("ID"),
                 F.concat(
                     F.lit("["),
                     F.array_join(
@@ -321,7 +320,7 @@ def ui_validation(
             elif prop not in UI_NO_FILL_PROPS:
                 df = df.withColumn(prop, F.coalesce(_bt(prop), F.lit(NOT_SPECIFIED)))
         tables[node] = df
-    report = _literal_frame(
+    report = literal_frame(
         spark, report_rows, "Missing_Properties string, UI_Related boolean, Raw_Data_File string"
     )
     return tables, report

@@ -183,3 +183,18 @@ def test_generation_rename_collision_retries(spark, tmp_path, monkeypatch):
     )
     out = H.stamp_historical_value(df2, "id", "vals", state).collect()
     assert out[0]["vals"] == "b,a"
+
+
+def test_empty_state_has_no_python_side_scan(spark, tmp_path):
+    """Before the first generation exists, the state is a literal frame
+    built in the JVM: no optimized-plan leaf is a `LogicalRDD`, the
+    Python-side scan that would start a Python worker in a study's
+    first merge."""
+    from cds_etl_spark.operators import history as H
+
+    state = H._read_state(spark, str(tmp_path / "fresh_state"))
+    assert state.columns == ["key", "value"]
+    assert state.count() == 0
+    leaves = state._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert "LogicalRDD" not in names, names
