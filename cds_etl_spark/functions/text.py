@@ -42,23 +42,19 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(r"([A-Za-z]+|[0-9]+|[^A-Za-z0-9\s])"), 1)
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (the unit set for MinHash / Jaccard).
-
-    PERF: the inline split is embedded in the per-index transform
-    lambda, so interpreted evaluation re-splits the text once per
-    shingle position (measured 38× slower at sf0.1 than the staged
-    form). Hot paths must project ``F.split(text, ' ')`` into a real
-    column and call ``word_shingles_from_tokens`` — see
-    operators/dedup.
-    """
-    return word_shingles_from_tokens(F.split(text, " "), k)
-
-
 def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """Shingles over a pre-projected token-array column: one array
     expression per row, no explode, element_at reads the materialized
-    array. Rows with fewer than k tokens get an empty set."""
+    array. Rows with fewer than k tokens get an empty set.
+
+    Callers stage the tokens: project ``F.split(text, ' ')`` into a
+    real column first and pass that column. Given an inline split, the
+    transform lambda re-splits the document on every element_at of
+    every shingle position — quadratic per document (measured 38×
+    slower at sf0.1). operators/dedup and operators/retrieval stage;
+    two registry queries still pass an inline split:
+    ``qs152_bloom_decontaminate`` (plans/q_corpus_quality.py) and
+    ``qs122_minhash_signatures`` (plans/q_tpch_graph.py)."""
     n = F.size(toks)
     idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
         F.array().cast("array<int>")

@@ -81,63 +81,8 @@ def minhash_lsh_pairs(
     the exact refine keeps the result a subset of the true >= j pairs
     with the same recall curve — the production knob.
     """
-    if hash_family != "portable":
-        sh, bands_df = _signature_bands(
-            df, id_col, text_col, shingle_k, num_hashes, bands, hash_family
-        )
-        a = bands_df.alias("a")
-        b = bands_df.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a._bi") == F.col("b._bi"))
-                & (F.col("a._key") == F.col("b._key"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .select(F.col("a._id").alias("d1"), F.col("b._id").alias("d2"))
-            .distinct()
-        )
-        sets = sh.select(F.col("_id"), F.col("_sh"))
-        return (
-            cand.join(sets.withColumnRenamed("_id", "d1").withColumnRenamed("_sh", "_sa"), "d1")
-            .join(sets.withColumnRenamed("_id", "d2").withColumnRenamed("_sh", "_sb"), "d2")
-            .select("d1", "d2", jaccard(F.col("_sa"), F.col("_sb")).alias("jac"))
-            .filter(F.col("jac") >= min_jaccard)
-        )
-    rows_per_band = num_hashes // bands
-    # The shingle+signature projection is the expensive stage (md5 over
-    # every shingle; higher-order fns evaluate interpreted) and it has
-    # FOUR consumers below (both sides of the band self-join, both
-    # sides of the refine join). localCheckpoint materializes it once —
-    # the index-build step; at scale you'd persist signatures to the
-    # warehouse for reuse across dedup runs anyway.
-    sh = cut_lineage(  # pin: corpus-scale (shingle arrays per doc)
-        df.select(F.col(id_col).alias("_id"), F.split(F.col(text_col), " ").alias("_toks"))
-        .select("_id", word_shingles_from_tokens(F.col("_toks"), shingle_k).alias("_sh"))
-    )
-    # Digest arrays as real columns: the md5 transforms (the dominant
-    # cost) run once per row; the 12 slice/min expressions and band
-    # keys read the materialized arrays.
-    n_groups = (num_hashes + 3) // 4
-    digests = sh.select(
-        "_id", *[minhash_digest(F.col("_sh"), g).alias(f"_d{g}") for g in range(n_groups)]
-    )
-    sig = digests.select(
-        "_id",
-        minhash_from_digests(
-            [F.col(f"_d{g}") for g in range(n_groups)], num_hashes
-        ).alias("_sig"),
-    ).select(
-        # …and the signature too: lsh_band_keys reads it positionally
-        # 12×, which must hit a materialized array, not re-min 12
-        # transforms.
-        "_id",
-        lsh_band_keys(F.col("_sig"), bands, rows_per_band).alias("_bk"),
-    )
-    # Explode to (id, band_idx, band_key): the only wide payload (_sh)
-    # stays behind — rejoined later only for surviving candidates.
-    bands_df = cut_lineage(  # pin: corpus-scale (band rows per doc)
-        sig.select("_id", F.posexplode("_bk").alias("_bi", "_key"))
+    sh, bands_df = _signature_bands(
+        df, id_col, text_col, shingle_k, num_hashes, bands, hash_family
     )
     a = bands_df.alias("a")
     b = bands_df.alias("b")
@@ -476,9 +421,10 @@ def _signature_bands(
     hash_family: str = "portable",
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature plumbing: (id, shingle-set) and exploded
-    (id, band_idx, band_key) frames, both materialized once. Factored
-    from ``minhash_lsh_pairs`` for the incremental-index path — at
-    scale the bands frame IS the persisted dedup index.
+    (id, band_idx, band_key) frames, both materialized once. The one
+    signature path of ``minhash_lsh_pairs``, the incremental check and
+    the persisted index — at scale the bands frame IS the persisted
+    dedup index.
 
     ``hash_family``: "portable" = md5-sliced (cross-engine, the oracle
     vehicle); "fast" = xxhash64 (native codegen int64s — the
@@ -487,6 +433,10 @@ def _signature_bands(
     refine downstream is family-independent, so the GUARANTEE class
     (1-(1-j^r)^b candidate recall, exact verify) is identical."""
     rows_per_band = num_hashes // bands
+    # The shingle+signature projection is the expensive stage (md5 over
+    # every shingle; higher-order fns evaluate interpreted) and it has
+    # four consumers downstream (both sides of a band join, both sides
+    # of the refine join). The pin materializes it once.
     sh = cut_lineage(  # pin: corpus-scale (shingle arrays per doc)
         df.select(F.col(id_col).alias("_id"), F.split(F.col(text_col), " ").alias("_toks"))
         .select("_id", word_shingles_from_tokens(F.col("_toks"), shingle_k).alias("_sh"))
@@ -503,6 +453,10 @@ def _signature_bands(
             "_id", lsh_band_keys_fast(F.col("_sig"), bands, rows_per_band).alias("_bk")
         )
     else:
+        # Digest arrays as real columns: the md5 transforms (the
+        # dominant cost) run once per row; the slice/min expressions
+        # read the materialized arrays, and the band keys read the
+        # materialized signature positionally.
         n_groups = (num_hashes + 3) // 4
         digests = sh.select(
             "_id", *[minhash_digest(F.col("_sh"), g).alias(f"_d{g}") for g in range(n_groups)]
@@ -513,8 +467,15 @@ def _signature_bands(
                 [F.col(f"_d{g}") for g in range(n_groups)], num_hashes
             ).alias("_sig"),
         ).select("_id", lsh_band_keys(F.col("_sig"), bands, rows_per_band).alias("_bk"))
+    # Explode to (id, band_idx, band_key): the only wide payload (_sh)
+    # stays behind — rejoined later only for surviving candidates.
+    # posexplode_outer, not posexplode: posexplode's implicit
+    # `size(_bk) > 0` filter is pushed below the signature projections
+    # with the digest transforms substituted in, so every band key's
+    # element_at would rebuild all the minima in a non-codegen Filter.
+    # `_bk` always has `bands` entries, so the rows are the same.
     bands_df = cut_lineage(  # pin: corpus-scale (band rows per doc)
-        sig.select("_id", F.posexplode("_bk").alias("_bi", "_key"))
+        sig.select("_id", F.posexplode_outer("_bk").alias("_bi", "_key"))
     )
     return sh, bands_df
 

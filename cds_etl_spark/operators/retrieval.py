@@ -52,13 +52,16 @@ def decontaminate(
     explode distinct shingles → broadcast-hash semi match → one
     shuffle on the document id for the per-doc regroup.
     """
-    toks = lambda c: F.split(F.lower(F.col(c)), " ")  # noqa: E731
+    # Tokens staged as a real column on both sides: inline, the split
+    # would sit inside the shingle transform's lambda and re-split the
+    # document for every element_at of every shingle position.
+    toks = F.split(F.lower(F.col(text_col)), " ").alias("_toks")
     # Scale-adaptive input spread (guide §2.5): a single-file corpus
     # scan would run the whole shingle+match pipeline in one task.
     corpus = spread_scan(corpus, id_col)
-    sh_corpus = corpus.select(
+    sh_corpus = corpus.select(F.col(id_col), toks).select(
         F.col(id_col),
-        word_shingles_from_tokens(toks(text_col), n).alias("shset"),
+        word_shingles_from_tokens(F.col("_toks"), n).alias("shset"),
     )
     # explode_outer, not explode: explode's implicit `size(arr) > 0`
     # filter is pushed below the staging projection with the shingle
@@ -67,9 +70,10 @@ def decontaminate(
     # optimization r15).  The extra NULL rows never match the inner
     # equi-join on `sh`, so results are identical.
     probe_sh = (
-        probe.select(
+        probe.select(toks)
+        .select(
             F.explode_outer(
-                word_shingles_from_tokens(toks(text_col), n)
+                word_shingles_from_tokens(F.col("_toks"), n)
             ).alias("sh")
         )
         .distinct()

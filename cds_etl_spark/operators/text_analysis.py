@@ -6,6 +6,15 @@ the scan projection, embarrassingly parallel, no shuffle, no Python.
 The reference's nearest analogue is its cell-level regex/string surface
 (O4/O26); these are the corpus-scale operators an LLM data pipeline
 needs on top.
+
+One token pass per call: ``language_id`` and ``quality_score`` each
+tokenize the text once and fold every signal they need (per-language
+lexicon hits, token count, token-length sum) into one ``F.aggregate``
+struct accumulator, deriving the result in its finish lambda.
+Higher-order functions are interpreted and never share common
+subexpressions, so an expression that referenced a token array or a
+count twice would recompute it per reference — and a filter pushed
+below a projection carries its own copy on top.
 """
 
 from __future__ import annotations
@@ -34,27 +43,56 @@ LANG_LEXICONS: dict[str, tuple[str, ...]] = {
 PUNCT_RE = r"[^A-Za-z0-9\s]"
 
 
-def _hit_count(toks: Column, lexicon: tuple[str, ...]) -> Column:
-    """Number of tokens present in the lexicon (with multiplicity)."""
-    lex = F.array(*[F.lit(w) for w in lexicon])
-    return F.size(F.filter(toks, lambda t: F.array_contains(lex, t)))
+def _hits(t: Column, lexicon: tuple[str, ...]) -> Column:
+    """1 when the token is in the lexicon, else 0."""
+    return F.when(t.isin(*lexicon), 1).otherwise(0)
 
 
-def language_scores(text: Column) -> dict[str, Column]:
-    toks = tokens(text)
-    return {lang: _hit_count(toks, lex) for lang, lex in LANG_LEXICONS.items()}
+# Per-token increments of the one-pass accumulator: each signal is
+# defined here once, and every kernel sums the subset it reads.
+_INCREMENTS = {
+    **{lang: (lambda t, lex=lex: _hits(t, lex)) for lang, lex in LANG_LEXICONS.items()},
+    "n_tok": lambda t: F.lit(1),
+    "len_sum": lambda t: F.length(t),
+}
+# The quality stopwords are the English lexicon's hits.
+_QUALITY_FIELDS = ("n_tok", "en", "len_sum")
+
+
+def _token_pass(toks: Column, fields: tuple[str, ...], finish=None) -> Column:
+    """One ``F.aggregate`` over a token array: a struct of int counters,
+    one per field of ``_INCREMENTS``, summed in a single interpreted
+    pass, then ``finish(acc)`` if given. Higher-order functions get no
+    common-subexpression reuse, so a kernel that needs several signals
+    computes them all here and derives its result in ``finish``."""
+    init = F.struct(*[F.lit(0).alias(f) for f in fields])
+
+    def merge(acc: Column, t: Column) -> Column:
+        return F.struct(*[(acc[f] + _INCREMENTS[f](t)).alias(f) for f in fields])
+
+    return F.aggregate(toks, init, merge, finish)
+
+
+def _total_tokens(text: Column) -> Column:
+    """``tokens(text)`` with a null text as no tokens."""
+    return F.coalesce(tokens(text), F.array().cast("array<string>"))
 
 
 def language_id(text: Column, default: str = "und") -> Column:
     """Argmax lexicon-hit language with deterministic ties (lexicon
-    order) and 'und' when no lexicon hits at all."""
-    scores = language_scores(text)
-    best_score = F.greatest(*scores.values())
-    out: Column = F.lit(default)
-    # Reverse order so earlier lexicons win exact ties.
-    for lang in reversed(list(scores)):
-        out = F.when(scores[lang] == best_score, F.lit(lang)).otherwise(out)
-    return F.when(best_score > 0, out).otherwise(F.lit(default))
+    order) and 'und' when no lexicon hits at all. One token pass: the
+    per-language hit counts are the accumulator, the argmax its
+    finish."""
+
+    def pick(acc: Column) -> Column:
+        best = F.greatest(*[acc[lang] for lang in LANG_LEXICONS])
+        out: Column = F.lit(default)
+        # Reverse order so earlier lexicons win exact ties.
+        for lang in reversed(list(LANG_LEXICONS)):
+            out = F.when(acc[lang] == best, F.lit(lang)).otherwise(out)
+        return F.when(best > 0, out).otherwise(F.lit(default))
+
+    return _token_pass(_total_tokens(text), tuple(LANG_LEXICONS), pick)
 
 
 def token_count_ws(text: Column) -> Column:
@@ -67,22 +105,14 @@ def token_count_bpe(text: Column) -> Column:
     return F.size(bpe_ish_tokens(text))
 
 
-def quality_features(text: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword-ratio quality signals.
-
-    Ratios are exact IEEE divisions of integer counts — bit-identical
-    on any engine, no rounding needed.
-    """
-    toks = tokens(text)
-    n_tok = F.size(toks)
+def _quality_features(stats: Column, text: Column) -> dict[str, Column]:
+    """The quality signals from a ``_QUALITY_FIELDS`` accumulator (a
+    null accumulator, from a null text, gives null counts and 0.0
+    ratios). Ratios are exact IEEE divisions of integer counts —
+    bit-identical on any engine, no rounding needed."""
+    n_tok = stats["n_tok"]
     n_chars = F.length(text)
     n_punct = F.size(F.regexp_extract_all(text, F.lit(PUNCT_RE), 0))
-    n_stop = _hit_count(toks, LANG_LEXICONS["en"])
-    mean_tok_len = F.when(
-        n_tok > 0,
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)).cast("double")
-        / n_tok.cast("double"),
-    ).otherwise(F.lit(0.0))
     return {
         "n_chars": n_chars.cast("bigint"),
         "n_tokens": n_tok.cast("bigint"),
@@ -90,17 +120,30 @@ def quality_features(text: Column) -> dict[str, Column]:
             n_chars > 0, n_punct.cast("double") / n_chars.cast("double")
         ).otherwise(F.lit(0.0)),
         "stopword_ratio": F.when(
-            n_tok > 0, n_stop.cast("double") / n_tok.cast("double")
+            n_tok > 0, stats["en"].cast("double") / n_tok.cast("double")
         ).otherwise(F.lit(0.0)),
-        "mean_token_len": mean_tok_len,
+        "mean_token_len": F.when(
+            n_tok > 0, stats["len_sum"].cast("double") / n_tok.cast("double")
+        ).otherwise(F.lit(0.0)),
     }
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: inside-length-band + has some
-    stopwords + not punctuation-soup. Weights are integers/4 so the
-    score is an exact dyadic rational (engine-independent)."""
-    feats = quality_features(text)
+def _quality_stats(text: Column) -> Column:
+    """The quality accumulator of one text: one token pass."""
+    return _token_pass(tokens(text), _QUALITY_FIELDS)
+
+
+def quality_features(text: Column) -> dict[str, Column]:
+    """Length / punctuation / stopword-ratio quality signals.
+
+    Every token signal reads one accumulator; as inline expressions
+    each dict entry carries its own copy of the pass, so a caller that
+    selects several entries stages ``_quality_stats`` in a column first
+    (see ``document_profile``)."""
+    return _quality_features(_quality_stats(text), text)
+
+
+def _quality_score(feats: dict[str, Column]) -> Column:
     ok_len = (feats["n_tokens"] >= 5) & (feats["n_tokens"] <= 100000)
     ok_stop = feats["stopword_ratio"] > 0
     ok_punct = feats["punct_ratio"] < 0.2
@@ -114,20 +157,34 @@ def quality_score(text: Column) -> Column:
     return score.cast("double") / F.lit(4.0)
 
 
+def quality_score(text: Column) -> Column:
+    """Composite [0,1] quality heuristic: inside-length-band + has some
+    stopwords + not punctuation-soup. Weights are integers/4 so the
+    score is an exact dyadic rational (engine-independent). One token
+    pass: the score is the accumulator's finish (a null text scores as
+    an empty token list)."""
+    return _token_pass(
+        _total_tokens(text),
+        _QUALITY_FIELDS,
+        lambda acc: _quality_score(_quality_features(acc, text)),
+    )
+
+
 def document_profile(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """One-pass per-document text profile: token counts, quality
-    features, language guess, k-min fingerprint. Single projection —
-    every signal shares the tokenization subexpressions."""
+    features, language guess, k-min fingerprint. One token pass for
+    the quality signals (staged), one for the language guess, one raw
+    split for the shingles."""
     from cds_etl_spark.operators.skew import spread_scan
 
     # Raw-token split staged as a column so the shingle transform reads
-    # a materialized array (see functions.text.word_shingles PERF note).
+    # a materialized array (see functions.text.word_shingles_from_tokens).
     # r15 (guide §2.5): the profile is a pure map — on a single-file
-    # scan every interpreted per-row signal (lang-ID lexicon HOFs,
-    # shingle fingerprint) ran in ONE task; spread_scan parallelizes
-    # it and is a no-op at real scale.
+    # scan every interpreted per-row signal (lang-ID and quality token
+    # passes, shingle fingerprint) ran in ONE task; spread_scan
+    # parallelizes it and is a no-op at real scale.
     staged = spread_scan(
         df.select(
             F.col(id_col),
@@ -137,13 +194,17 @@ def document_profile(
         id_col,
     )
     text = F.col("_text")
-    feats = quality_features(text)
+    # The quality accumulator staged too: the features and the score
+    # all read it, so the quality token pass runs once per document.
+    feats = _quality_features(F.col("_q"), text)
     return staged.select(
+        "*", _quality_stats(text).alias("_q")
+    ).select(
         F.col(id_col),
         *[c.alias(n) for n, c in feats.items()],
         token_count_bpe(text).alias("n_bpe_tokens"),
         language_id(text).alias("lang_guess"),
-        quality_score(text).alias("quality"),
+        _quality_score(feats).alias("quality"),
         kmin_fingerprint(
             word_shingles_from_tokens(F.col("_rawtoks"), 3)
         ).alias("fingerprint"),

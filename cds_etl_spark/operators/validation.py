@@ -81,10 +81,12 @@ def cascade_delete(
     recursively delete children left with ALL parent-FKs null, then
     drop those children. The relationship DAG is statically ≤5 deep
     (program→study→participant→sample→file→genomic_info), so this is
-    a bounded, lazy chain of broadcast joins — one shuffle-free pass
-    per DAG level, not a row-at-a-time recursion."""
+    a bounded, lazy chain of broadcast existence joins — one
+    shuffle-free pass per DAG level, not a row-at-a-time recursion.
+    ``bad_ids`` may repeat an id: the ``IN`` test needs no dedup, so
+    its build side has no aggregate."""
     tables = dict(tables)
-    bad = F.broadcast(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")).distinct())
+    bad = F.broadcast(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")))
     for rule in parent_mapping:
         if rule["parent_node"] != parent_node:
             continue
@@ -95,18 +97,14 @@ def cascade_delete(
         fk = f"{rule['parent_node']}.{rule['property']}"
         if fk not in cdf.columns:
             continue
-        # Null-out FK hits (:184) via broadcast lookup.
-        cdf = (
-            cdf.join(bad, _bt(fk) == F.col("_bad_id"), "left")
-            .withColumn(fk, F.when(F.col("_bad_id").isNotNull(), None).otherwise(_bt(fk)))
-            .drop("_bad_id")
-        )
+        # Null-out FK hits (:184) via a broadcast existence join.
+        cdf = cdf.withColumn(fk, F.when(_bt(fk).isin(bad), None).otherwise(_bt(fk)))
         parent_list = _fk_cols(child, parent_mapping, cdf.columns)
         all_null = reduce(lambda a, b: a & b, [_bt(c).isNull() for c in parent_list])
         tables[child] = cdf
         # Grandchildren first (:185-191), from the nulled-out state.
         if any(r["parent_node"] == child for r in parent_mapping) and child in node_id_field:
-            child_bad = cdf.filter(all_null).select(_bt(node_id_field[child])).distinct()
+            child_bad = cdf.filter(all_null).select(_bt(node_id_field[child]))
             tables = cascade_delete(tables, parent_mapping, node_id_field, child_bad, child)
             cdf = tables[child]
         # Drop children with every FK null (:193).

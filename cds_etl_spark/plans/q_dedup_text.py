@@ -46,7 +46,8 @@ def _sql_list(words: tuple[str, ...]) -> str:
 
 
 # Shared oracle CTE: k=3 word shingles per document, matching
-# functions.text.word_shingles (split on single space, distinct).
+# functions.text.word_shingles_from_tokens over a single-space split
+# (distinct).
 _SHINGLES_CTE = """
 t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
 sh AS (
