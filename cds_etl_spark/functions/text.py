@@ -51,10 +51,7 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     real column first and pass that column. Given an inline split, the
     transform lambda re-splits the document on every element_at of
     every shingle position — quadratic per document (measured 38×
-    slower at sf0.1). operators/dedup and operators/retrieval stage;
-    two registry queries still pass an inline split:
-    ``qs152_bloom_decontaminate`` (plans/q_corpus_quality.py) and
-    ``qs122_minhash_signatures`` (plans/q_tpch_graph.py)."""
+    slower at sf0.1)."""
     n = F.size(toks)
     idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
         F.array().cast("array<int>")
@@ -74,30 +71,6 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
 # --------------------------------------------------------------------------
 
 
-def minhash_signature(shingle_set: Column, num_hashes: int = 12) -> Column:
-    """MinHash signature: array of ``num_hashes`` 8-hex keys; hash j is
-    the min over the set of the j-th slice of ``md5('p<j/4>|' ||
-    shingle)`` — one md5 yields FOUR 8-hex permutation words, so a
-    12-hash signature costs 3 md5 calls per shingle, not 12 (hash
-    slicing — the standard one-wide-hash-many-functions trick; Spark
-    higher-order functions evaluate interpreted, so md5 count is the
-    dominant cost). Signature size is ~8·H bytes per row regardless of
-    document size — the LSH shuffle payload is document-size-
-    independent."""
-    groups = (num_hashes + 3) // 4
-    out = []
-    for g in range(groups):
-        digest = minhash_digest(shingle_set, g)
-        for slot in range(min(4, num_hashes - g * 4)):
-            out.append(_min_slice(digest, slot))
-    return F.array(*out)
-    # NB: as a single expression each slice re-evaluates its digest
-    # transform (interpreted HOFs have no common-subexpression reuse).
-    # Hot paths should project minhash_digest(g) into real columns
-    # first and combine with minhash_from_digests — see
-    # operators/dedup.minhash_lsh_pairs.
-
-
 def minhash_digest(shingle_set: Column, group: int) -> Column:
     """One md5 digest array; each digest yields four 8-hex hash words."""
     return F.transform(
@@ -112,8 +85,11 @@ def _min_slice(digest: Column, slot: int) -> Column:
 
 
 def minhash_from_digests(digest_cols: list[Column], num_hashes: int) -> Column:
-    """Signature from pre-projected digest columns (the md5 transforms
-    run once per row; the slices here are cheap substrings)."""
+    """MinHash signature from pre-projected digest columns: hash j is
+    the min over the set of the (j % 4)-th 8-hex slice of digest
+    j // 4, so a 12-hash signature costs 3 md5 calls per shingle. The
+    md5 transforms run once per row; the slices here are cheap
+    substrings."""
     out = []
     for j in range(num_hashes):
         out.append(_min_slice(digest_cols[j // 4], j % 4))
@@ -272,8 +248,9 @@ def bigram_repetition_stats(text: Column) -> Column:
 def minhash_signature_fast(shingle_set: Column, num_hashes: int = 12) -> Column:
     """xxhash64 MinHash signature — the PRODUCTION hash family.
 
-    Same blocking math as ``minhash_signature`` (min over the set per
-    salted hash function), different kernel: ``xxhash64`` is a native
+    Same blocking math as the md5 family (``minhash_digest`` +
+    ``minhash_from_digests``: min over the set per salted hash
+    function), different kernel: ``xxhash64`` is a native
     codegen expression returning int64 directly, versus md5's hex
     string round-trip through interpreted transforms. The trade is
     cross-engine portability: DuckDB cannot reproduce xxhash64, so

@@ -1,10 +1,11 @@
 """Vector column functions over ``array<float|double>`` embeddings.
 
 All of these are built from Spark higher-order functions (``zip_with``,
-``aggregate``) — they run JVM-side inside whole-stage codegen with no
-Python/Arrow transfer, which is the scale path for 100 TB embedding
-tables. A Pandas-UDF batched variant (numpy dot) exists in
-``operators/similarity.py`` for wide-batch top-k where BLAS wins.
+``aggregate``) — they run JVM-side with no Python/Arrow transfer,
+which is the scale path for 100 TB embedding tables. The one
+Pandas-UDF batched variant (numpy dot) is
+``operators/similarity.cosine_topk_pandas``, for wide-batch top-k where
+BLAS wins.
 
 Accumulation is sequential left-to-right in double precision, matching
 DuckDB's list_dot_product/list_cosine_similarity on DOUBLE[] closely
@@ -49,9 +50,7 @@ def dot_product_fixed(a: Column, b: Column, dim: int) -> Column:
     (qs146). Unrolling wins only for SMALL fixed widths or when the
     alternative is MANY separate HOF passes over one array (the
     qs402 16-projection shape — BASELINE r13). Prefer
-    :func:`dot_product` for full-width dots; the batched-matmul
-    ``ivf_assign_arrow`` is the production assignment path (BASELINE
-    r6 ANN evidence)."""
+    :func:`dot_product` for full-width dots."""
     dot = None
     for i in range(dim):
         term = F.element_at(a, i + 1) * F.element_at(b, i + 1)

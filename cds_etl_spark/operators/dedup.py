@@ -24,7 +24,7 @@ Scale design (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cds_etl_spark.operators.pin import cut_lineage
@@ -919,9 +919,8 @@ def semantic_dedup(
     but one representative from every within-cluster near-duplicate
     group.
 
-    ``anchors`` is a small (cid, cvec) frame — at scale the trained
-    k-means centroids (operators/similarity.kmeans_train); here any
-    deterministic anchor set. Assignment is a broadcast-scored
+    ``anchors`` is a small (cid, cvec) frame: any deterministic anchor
+    set, such as qs146's lowest vec_ids. Assignment is a broadcast-scored
     MAX-STRUCT aggregate, not a window: ``max(struct(sim, -cid,
     ...))`` is lexicographic, so partial aggregation collapses the
     C-way crossjoin to ONE row per vector per partition before the
@@ -1042,100 +1041,6 @@ def semantic_dedup(
     )
 
 
-def semantic_dedup_arrow(
-    emb: DataFrame,
-    anchors: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/BLAS physical strategy for ``semantic_dedup`` — same
-    logical op, same (id, cid, is_dup) output, same rounding semantics
-    (round-6 assignment argmax with lowest-cid ties, round-4 dup
-    threshold), different physics.
-
-    The exact column-expression path evaluates cosine via interpreted
-    higher-order functions: n·k assignment dots + Σ cluster² refine
-    dots become per-element Python-free but non-codegen loops — fine
-    to ~10⁴ vectors, measured minutes at 200k×1000 anchors. Here both
-    quadratic stages run in numpy: assignment is ONE batched matmul
-    per Arrow batch against the broadcast anchor matrix (mapInPandas),
-    and the within-cluster pair check is a per-group matmul over a
-    cluster-sized frame (applyInPandas; the groupBy(cid) shuffle is
-    the one wide op, cluster-bounded by the anchor count). ~13 GFLOP
-    at 200k vectors — BLAS seconds. Equality with the exact path is
-    pinned by a differential test on the shipped corpus; keep the
-    exact path for oracle checks, this one for scale.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    a_rows = anchors.select("cid", "cvec").collect()
-    a_cids = np.array([r["cid"] for r in a_rows], dtype=np.int64)
-    order = np.argsort(a_cids)
-    a_cids = a_cids[order]
-    a_mat = np.stack([np.asarray(a_rows[int(i)]["cvec"], dtype=np.float64) for i in order])
-    a_unit = a_mat / np.maximum(np.linalg.norm(a_mat, axis=1, keepdims=True), 1e-300)
-
-    v = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_vv"))
-
-    def _assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["_vv"].to_numpy())
-            mu = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
-            s = np.round(mu @ a_unit.T, 6)
-            smax = s.max(axis=1, keepdims=True)
-            # argmax of the == mask returns the FIRST max — with cids
-            # sorted ascending that is the lowest cid, matching the
-            # exact path's (sim desc, cid asc) tie-break.
-            pick = np.argmax(s == smax, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "_vv": pdf["_vv"], "cid": a_cids[pick]}
-            )
-
-    assign_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("_vv", ArrayType(DoubleType())),
-            StructField("cid", LongType()),
-        ]
-    )
-    assigned = v.mapInPandas(_assign, schema=assign_schema)
-
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("cid", LongType()),
-            StructField("is_dup", BooleanType()),
-        ]
-    )
-
-    def _cluster_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        m = np.stack(pdf["_vv"].to_numpy())
-        mu = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-300)
-        s = np.round(mu @ mu.T, 4)
-        close = s >= threshold
-        # is_dup[i] = any j < i (by id order) with close[i, j]
-        dup = np.tril(close, k=-1).any(axis=1)
-        return pd.DataFrame(
-            {id_col: pdf[id_col], "cid": pdf["cid"], "is_dup": dup}
-        )
-
-    return assigned.groupBy("cid").applyInPandas(_cluster_dedup, schema=out_schema)
-
-
 def compact_minhash_index(spark, path: str, out_path: str) -> None:
     """Maintenance pass for an append-only MinHash index
     (``build_minhash_index(..., mode="append")`` grows it every
@@ -1164,103 +1069,3 @@ def compact_minhash_index(spark, path: str, out_path: str) -> None:
     # Compaction is the natural stats-refresh point for ingest loops
     # that skip the per-append recompute (band_stats=False).
     write_minhash_band_stats(spark, out_path)
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
-) -> DataFrame:
-    """Winnowing fingerprints, production hash family (Schleimer et
-    al. 2003 — qs177 is the md5 oracle vehicle of the same
-    selection; this is the fast path): xxhash64 every k-token gram
-    JVM-side, slide a w-hash window, keep each window's minimum with
-    the paper's rightmost tie rule — any shared run of ≥ k+w−1
-    tokens between two documents is GUARANTEED to yield a shared
-    fingerprint (pigeonhole, not probability), at ~2/(w+1) the
-    storage of full shingling.
-
-    Returns (id, fp, pos) distinct selected fingerprints. The
-    argmin ties break rightmost via a (hash, −pos) struct MIN —
-    no string packing needed when the oracle isn't watching.
-    Scale: k-gram hashing and window minima are row-local /
-    doc-partitioned; the shuffle carries (id, pos, 8-byte hash)."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.xxhash64(
-                F.concat_ws(
-                    " ",
-                    *[
-                        F.element_at(toks, (i + j).cast("int"))
-                        for j in range(k)
-                    ],
-                )
-            ).alias("h"),
-        ),
-    )
-    kg = (
-        df.filter(F.size(toks) >= k)
-        .select(F.col(id_col), F.explode(grams).alias("g"))
-        .select(
-            id_col,
-            F.col("g.pos").alias("pos"),
-            F.col("g.h").alias("h"),
-        )
-    )
-    wmax = Window.partitionBy(id_col)
-    wframe = Window.partitionBy(id_col).orderBy("pos").rowsBetween(
-        0, w - 1
-    )
-    key = F.struct(F.col("h"), (-F.col("pos")).alias("np"))
-    win = kg.withColumn("mx", F.max("pos").over(wmax)).withColumn(
-        "mk", F.min(key).over(wframe)
-    )
-    return (
-        win.filter(F.col("pos") <= F.col("mx") - (w - 1))
-        .select(
-            F.col(id_col),
-            F.col("mk.h").alias("fp"),
-            (-F.col("mk.np")).alias("pos"),
-        )
-        .distinct()
-    )
-
-
-def winnow_match(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    min_shared: int = 3,
-    max_fp_docs: int | None = None,
-) -> DataFrame:
-    """Pair documents sharing ≥ ``min_shared`` distinct winnowed
-    fingerprints — the match stage over ``winnow_fingerprints``
-    output, with the qs177/qs111 hot-key prune (``max_fp_docs``
-    drops boilerplate fingerprints present in more documents than
-    that, bounding the pair join's fan-out)."""
-    base = fps.select(F.col(id_col).alias("id"), "fp").distinct()
-    if max_fp_docs is not None:
-        hot = (
-            base.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_fp_docs)
-            .select("fp")
-        )
-        base = base.join(hot, "fp", "left_anti")
-    a, b = base.alias("a"), base.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared_fp"))
-        .filter(F.col("shared_fp") >= min_shared)
-    )

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three tiers, per SURVEY.md §7.1 M5:
+Search tiers, per SURVEY.md §7.1 M5:
 
 * ``cosine_topk``      — exact brute-force top-k: the correctness
   baseline. Scan-parallel scoring + ``TakeOrderedAndProject`` (each
@@ -19,22 +19,22 @@ Three tiers, per SURVEY.md §7.1 M5:
   to BLAS; kept as an alternative physical strategy for the same
   logical op.
 
-Centroid choice for the ORACLE-CHECKED query (qs59) stays
-deterministic first-C so DuckDB can replay the exact algorithm;
-``kmeans_train`` fills the production slot — a seeded, deterministic
-Lloyd trainer on a hash-sample whose (cid, cvec) output plugs
-straight into ``ivf_assign``/``ivf_topk`` (recall-tested against
-first-C on a planted-blob fixture in tests/test_similarity_lsh.py).
+* ``hyperplane_lsh_assign`` — data-independent signed-projection
+  buckets (qs112), the LSH counterpart of the IVF assignment.
+* ``pq_encode`` / ``pq_adc_topk`` — product-quantization codes and
+  integer-exact asymmetric-distance search over them (qs151).
+
+Centroids are the caller's ``(cid, cvec)`` frame. The oracle-checked
+queries (qs59, qs248) take the first C vectors, so DuckDB can replay
+the exact algorithm; qs248 is one Lloyd iteration over them.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from cds_etl_spark.operators.pin import cut_lineage
 from pyspark.sql.types import DoubleType
 
 from cds_etl_spark.functions.vector import cosine_similarity, dot_product, l2_norm
@@ -88,9 +88,7 @@ def ivf_assign(
     # With a known ``dim``, the cosine decomposes into an unrolled
     # dot product plus norms computed ONCE per side BEFORE the
     # crossjoin (n + C norm evaluations instead of 3·C·n HOF passes
-    # over the expansion) — bit-identical values. For corpus-scale
-    # assignment prefer ivf_assign_arrow (batched matmul: 294 s →
-    # 12.8 s on 200k×64, C=64 — BASELINE r6 ANN evidence).
+    # over the expansion) — bit-identical values.
     if dim is not None:
         from cds_etl_spark.functions.vector import dot_product_fixed
 
@@ -195,83 +193,6 @@ def ivf_topk(
     )
 
 
-def kmeans_train(
-    df: DataFrame,
-    n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iterations: int = 8,
-    sample_mod: int = 1,
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministic seeded Lloyd's k-means over a hash-sample: the
-    production centroid trainer for the IVF slot (``ivf_assign`` /
-    ``ivf_topk`` accept its output directly as ``(cid, cvec)``).
-    First-C centroids remain the choice for oracle replay (qs59);
-    this trainer exists for recall.
-
-    Determinism without RNG state: the training sample is
-    ``xxhash64(id, seed) % sample_mod == 0`` (a fixed, engine-portable
-    subset — at 100 TB train on ~1/1000th of the corpus, not all of
-    it), and initialization takes the C sample vectors with the
-    smallest hash — a seeded spread uncorrelated with insertion order,
-    unlike first-C. Each Lloyd round is one broadcast-assign (same
-    argmax as ivf_assign, cosine rounded to 6 dp) plus a narrow
-    (cid, pos) mean aggregation; the C·dim means are collected and
-    re-broadcast — the centroid set is driver-sized BY DEFINITION
-    (it must broadcast for assignment anyway), so this collect is the
-    algorithm, not a bottleneck. Component means round to 6 dp so
-    accumulation-order noise can never flip a later assignment; empty
-    clusters keep their previous centroid."""
-    spark = df.sparkSession
-    h = F.abs(F.xxhash64(F.col("_id").cast("string"), F.lit(seed)))
-    sample = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        .filter((h % sample_mod) == 0 if sample_mod > 1 else F.lit(True))
-    )
-    sample = cut_lineage(sample)  # pin: corpus-scale (sampled corpus slice)
-    init = (
-        sample.withColumn("_h", h)
-        .orderBy("_h", "_id")
-        .limit(n_centroids)
-        .select("_v")
-        .collect()
-    )
-    centroids = [list(r["_v"]) for r in init]
-
-    def _cdf(cents: list[list[float]]) -> DataFrame:
-        return spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid int, cvec array<double>"
-        )
-
-    dim = len(centroids[0]) if centroids else 0
-    for _ in range(iterations):
-        assigned = ivf_assign(
-            sample, _cdf(centroids), id_col="_id", vec_col="_v", dim=dim or None
-        )
-        means = (
-            assigned.select("cid", F.posexplode("_v").alias("_pos", "_x"))
-            .groupBy("cid", "_pos")
-            .agg(F.round(F.avg("_x"), 6).alias("_m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_m"))),
-                    lambda s: s["_m"],
-                ).alias("_mean")
-            )
-            .collect()
-        )
-        nxt = list(centroids)
-        for r in means:
-            nxt[r["cid"]] = list(r["_mean"])
-        centroids = nxt
-    return _cdf(centroids)
-
-
 def cosine_topk_pandas(
     df: DataFrame,
     query: list[float],
@@ -355,57 +276,6 @@ def hyperplane_lsh_assign(
     )
 
 
-def lsh_topk(
-    assigned: DataFrame,
-    query_vec: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_bits: int = 16,
-    seed: int = 0,
-    multiprobe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN search over ``hyperplane_lsh_assign`` output: hash the query
-    with the same hyperplanes, probe its bucket (plus, with
-    ``multiprobe``, every 1-bit-flip neighbor — the standard recall
-    repair for boundary vectors), exact cosine top-k within the probed
-    set. Probe set is ≤ n_bits+1 bucket ids — a broadcast semi-join /
-    partition prune; the corpus outside those buckets is never read."""
-    qb = hyperplane_lsh_assign(
-        query_vec.select(F.lit(-1).alias(id_col), F.col("qvec").alias(vec_col)),
-        dim=dim,
-        n_bits=n_bits,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select("bucket")
-    if multiprobe:
-        flips = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(n_bits)
-            ],
-        )
-        probes = qb.select(F.explode(flips).alias("bucket")).distinct()
-    else:
-        probes = qb
-    return (
-        assigned.join(F.broadcast(probes), "bucket")
-        .join(F.broadcast(query_vec))
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine_similarity(F.col(vec_col).cast("array<double>"), F.col("qvec")),
-                4,
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), id_col)
-        .limit(k)
-    )
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: DataFrame,
@@ -413,7 +283,6 @@ def pq_encode(
     sub_dim: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    metric: str = "dot",
 ) -> DataFrame:
     """Product-quantization encode (Jégou et al. 2011): split each
     vector into ``n_sub`` sub-vectors and replace each with the id of
@@ -442,22 +311,10 @@ def pq_encode(
             )
         ).alias("sub", "_sv"),
     )
-    # metric="dot": argmax inner product (the qs151 oracle contract).
-    # metric="l2": proper reconstruction encoding — argmin Euclidean
-    # distance, expressed as argmax(2·s·c − ‖c‖²) since ‖s‖² is
-    # constant per (vector, sub) and cannot change the argmin. The
-    # dot form ranks large-norm codewords up regardless of fit, which
-    # is fine when both engines replay it (oracle parity) but wrecks
-    # reconstruction quality — measured recall@10 0.0 vs 0.69 on
-    # planted clusters (BASELINE r6 ANN evidence).
-    if metric == "l2":
-        fit = F.round(
-            2 * dot_product(F.col("_sv"), F.col("cwvec"))
-            - dot_product(F.col("cwvec"), F.col("cwvec")),
-            6,
-        )
-    else:
-        fit = F.round(dot_product(F.col("_sv"), F.col("cwvec")), 6)
+    # Argmax inner product: the qs151 oracle contract. It ranks
+    # large-norm codewords up regardless of fit, so it is a replayable
+    # encoding, not a minimum-reconstruction-error one.
+    fit = F.round(dot_product(F.col("_sv"), F.col("cwvec")), 6)
     scored = subs.join(F.broadcast(codebooks), "sub").select(
         id_col,
         "sub",
@@ -515,311 +372,6 @@ def pq_adc_topk(
         codes.join(F.broadcast(lut), ["sub", "code"])
         .groupBy(id_col)
         .agg(F.sum("_e6").alias("score_e6"))
-        .orderBy(F.col("score_e6").desc(), id_col)
-        .limit(k)
-    )
-
-
-def ivf_assign_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cid_col: str = "cid",
-    cvec_col: str = "cvec",
-) -> DataFrame:
-    """Arrow/BLAS strategy for the IVF assignment — the production
-    twin of ``ivf_assign`` (the semantic_dedup_arrow precedent): the
-    C×dim centroid matrix collects to the driver (driver-sized BY
-    DEFINITION — it must broadcast for assignment anyway) and each
-    Arrow batch scores as ONE numpy matmul ``V @ C.T`` instead of a
-    C-way row expansion. Measured 200k×64, C=64: the matmul pass is
-    ~2 s where the relational expansion needs ~30 s of well-
-    partitioned expression evaluation (and minutes if the input
-    partitioning is skewed — a batched map inherits partitioning but
-    never EXPANDS rows, so skew hurts C× less).
-
-    Tie semantics match ``ivf_assign`` exactly: cosine rounded to
-    6 dp, ties take the smallest centroid id (numpy argmax returns
-    the first maximum; centroid rows are ordered by cid) — the
-    equivalence is unit-tested, so either strategy can back qs59's
-    oracle contract."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    rows = sorted(
-        centroids.select(cid_col, cvec_col).collect(), key=lambda r: r[cid_col]
-    )
-    cids = np.array([r[cid_col] for r in rows], dtype=np.int64)
-    C = np.array([list(r[cvec_col]) for r in rows], dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-    Cn[Cn == 0] = 1.0
-
-    def _assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            Vn = np.linalg.norm(V, axis=1)
-            Vn[Vn == 0] = 1.0
-            sims = np.round((V @ C.T) / np.outer(Vn, Cn), 6)
-            best = cids[np.argmax(sims, axis=1)]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    cid_col: best.astype(np.int32),
-                }
-            )
-
-    schema = f"{id_col} long, {vec_col} array<double>, {cid_col} int"
-    return df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).mapInPandas(_assign, schema=schema)
-
-
-def pq_train_codebooks(
-    df: DataFrame,
-    n_sub: int = 4,
-    sub_dim: int = 16,
-    k: int = 16,
-    sample_mod: int = 50,
-    iterations: int = 10,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train PQ sub-space codebooks (Jégou et al. 2011 §III): per
-    sub-space, k-means over a deterministic hash-sample of the
-    corpus's sub-vectors. The training set is a driver-sized sample
-    BY DESIGN (a codebook is k·sub_dim floats — hundreds of values —
-    and PQ quality saturates with a few thousand training points per
-    sub-space), so Lloyd runs in numpy on the collected sample: no
-    per-iteration Spark jobs, no RNG (hash-sample + smallest-hash
-    init, the kmeans_train determinism contract).
-
-    Returns (sub, code, cwvec) ready for ``pq_encode``/``pq_adc_topk``.
-    Against planted-cluster data this lifts recall@10 from noise
-    (untrained random codewords) to ~search-grade — the honest "PQ
-    needs trained codebooks" knob, measured in BASELINE."""
-    import numpy as np
-
-    h = F.abs(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-    sample_rows = (
-        df.select(
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            h.alias("_h"),
-        )
-        .filter((F.col("_h") % sample_mod) == 0 if sample_mod > 1 else F.lit(True))
-        .orderBy("_h")
-        .limit(50_000)
-        .collect()
-    )
-    X = np.array([list(r["_v"]) for r in sample_rows], dtype=np.float64)
-    out = []
-    for s in range(n_sub):
-        Xs = X[:, s * sub_dim : (s + 1) * sub_dim]
-        cents = Xs[:k].copy()  # rows arrive in hash order — seeded spread
-        for _ in range(iterations):
-            d2 = ((Xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k):
-                m = Xs[assign == c]
-                if len(m):
-                    cents[c] = m.mean(axis=0)
-        cents = np.round(cents, 6)
-        for c in range(k):
-            out.append((s, c, [float(x) for x in cents[c]]))
-    return df.sparkSession.createDataFrame(
-        out, "sub int, code int, cwvec array<double>"
-    )
-
-
-def lsh_bucket_py(vec, n_bits: int = 16, seed: int = 0) -> int:
-    """Driver-side twin of ``hyperplane_lsh_assign``'s bucket
-    expression: the sign matrix is plain Python (``lsh_sign_matrix``)
-    and the ±sum replays the JVM expression's exact left-to-right
-    IEEE-double accumulation (first term initializes, subsequent
-    terms add in component order), so the bucket id is BIT-IDENTICAL
-    to what the scan-fused expression computes — parity is
-    unit-tested. Lets a caller with the query vector in hand compute
-    its probe set without running Spark jobs."""
-    signs = lsh_sign_matrix(seed, n_bits, len(vec))
-    bucket = 0
-    for i, row in enumerate(signs):
-        dot = None
-        for d, s in enumerate(row):
-            term = float(vec[d]) if s > 0 else -float(vec[d])
-            dot = term if dot is None else dot + term
-        if dot is not None and dot >= 0:
-            bucket |= 1 << i
-    return bucket
-
-
-def lsh_topk_fast(
-    assigned: DataFrame,
-    qvec: list,
-    k: int = 10,
-    n_bits: int = 16,
-    seed: int = 0,
-    multiprobe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Low-latency LSH search when the query vector is driver-side
-    (the serving path): the probe bucket set computes in Python
-    (``lsh_bucket_py`` — bit-identical to the scan expression) and
-    lands in the plan as a LITERAL ``isin`` filter, so the whole
-    search is ONE job — filter (partition-prunable on a
-    bucket-partitioned layout) + fused cosine + TakeOrderedAndProject
-    — instead of ``lsh_topk``'s hash-the-query sub-jobs. Measured
-    4.6 s → sub-second per query on the r6 ANN evidence set; results
-    identical (same probe set, same exact re-rank)."""
-    b = lsh_bucket_py(qvec, n_bits, seed)
-    probes = [b] + ([b ^ (1 << i) for i in range(n_bits)] if multiprobe else [])
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        assigned.filter(F.col("bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine_similarity(F.col(vec_col).cast("array<double>"), qlit),
-                4,
-            ).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), id_col)
-        .limit(k)
-    )
-
-
-def ivfpq_build(
-    df: DataFrame,
-    centroids: DataFrame,
-    n_sub: int = 4,
-    sub_dim: int = 16,
-    k_codes: int = 16,
-    sample_mod: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = False,
-):
-    """IVF-PQ index build (the canonical billion-scale ANN structure,
-    Jégou et al. 2011 §IV): vectors are assigned to their coarse
-    centroid (IVF), and product quantization encodes the RESIDUAL
-    v − c(v) rather than v itself — residuals concentrate near the
-    origin, so the same codebook budget spends its resolution where
-    the data actually is. Composes the existing pieces: ``ivf_assign``
-    → residual projection → ``pq_train_codebooks``/``pq_encode`` with
-    ``metric="l2"`` (reconstruction encoding).
-
-    Returns ``(codes, codebooks)``: codes is one (id, cid, sub, code)
-    row per sub-space — the whole index is 1 coarse id + n_sub small
-    codes per vector. Scale: assignment and encode are broadcast
-    crossjoin + max-struct aggregates (one shuffled row per vector
-    resp. (vector, sub)); residual subtraction is a row-local
-    zip_with; training collects only a driver-sized hash-sample.
-    ``use_arrow`` routes coarse assignment through the batched-matmul
-    strategy (ivf_assign_arrow — the corpus-scale path, 294 s → 13 s
-    at 200k×64 per the BASELINE ANN evidence)."""
-    if use_arrow:
-        assigned = ivf_assign_arrow(
-            df, centroids, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        assigned = ivf_assign(
-            df, centroids, id_col=id_col, vec_col=vec_col
-        )
-    res = (
-        assigned.join(
-            F.broadcast(centroids.select("cid", "cvec")), "cid"
-        )
-        .select(
-            F.col(id_col),
-            F.col("cid"),
-            F.expr(
-                f"zip_with({vec_col}, cvec, (a, b) -> a - b)"
-            ).alias(vec_col),
-        )
-    )
-    books = pq_train_codebooks(
-        res,
-        n_sub=n_sub,
-        sub_dim=sub_dim,
-        k=k_codes,
-        sample_mod=sample_mod,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    codes = pq_encode(
-        res,
-        books,
-        n_sub=n_sub,
-        sub_dim=sub_dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        metric="l2",
-    )
-    return codes.join(res.select(id_col, "cid"), id_col), books
-
-
-def ivfpq_topk(
-    codes: DataFrame,
-    codebooks: DataFrame,
-    centroids: DataFrame,
-    query_vec: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    n_sub: int = 4,
-    sub_dim: int = 16,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF-PQ search: probe the ``nprobe`` centroids with the highest
-    query dot product, then ADC-score only their lists —
-    dot(q, v̂) = dot(q, c) + Σ_sub dot(q_sub, codeword_sub), i.e. the
-    per-centroid constant plus the residual lookup-table sum. Never
-    touches an original vector.
-
-    Determinism: the pq_adc_topk contract — every LUT entry and the
-    centroid term are ROUND(dot·1e6) → BIGINT, so each candidate's
-    score is an exact integer sum (accumulation order cannot flip a
-    rank), top-k ties break by id. Scale: probes and LUT are
-    driver-sized broadcasts; the only shuffle is the per-candidate
-    n_sub-row sum, over the probed lists only (≈ nprobe/C of the
-    corpus)."""
-    qd = F.round(
-        dot_product(F.col("cvec"), F.col("qvec")) * 1_000_000
-    ).cast("long")
-    probes = (
-        centroids.join(F.broadcast(query_vec))
-        .select("cid", qd.alias("_c_e6"))
-        .orderBy(F.col("_c_e6").desc(), "cid")
-        .limit(nprobe)
-    )
-    lut = codebooks.join(F.broadcast(query_vec)).select(
-        "sub",
-        "code",
-        F.round(
-            dot_product(
-                F.col("cwvec"),
-                F.slice(
-                    F.col("qvec"), F.col("sub") * sub_dim + 1, sub_dim
-                ),
-            )
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("_e6"),
-    )
-    cand = codes.join(F.broadcast(probes), "cid")
-    return (
-        cand.join(F.broadcast(lut), ["sub", "code"])
-        .groupBy(id_col, "_c_e6")
-        .agg(F.sum("_e6").alias("_r_e6"))
-        .select(
-            id_col,
-            (F.col("_c_e6") + F.col("_r_e6")).alias("score_e6"),
-        )
         .orderBy(F.col("score_e6").desc(), id_col)
         .limit(k)
     )

@@ -1230,11 +1230,10 @@ def qs146(spark: SparkSession, sf: str) -> DataFrame:
     cluster size, never corpus², exactly how the paper's k=50k
     clusters tame LAION-scale dedup — which is why the anchor count
     SCALES with the corpus, k = max(10, n/200) (deterministic
-    lowest-vec_id anchors; at scale the kmeans_train centroids), so
-    mean cluster size stays ~200 and the quadratic check is bounded at
-    every sf. Anything fixed (the original k=10) re-grows clusters
-    linearly with n — measured quadratic blowup at the 200k-vector
-    scale point. The oracle replays the anchor-count rule, assignment,
+    lowest-vec_id anchors), so mean cluster size stays ~200 and the
+    quadratic check is bounded at every sf. Anything fixed (the
+    original k=10) re-grows clusters linearly with n — measured
+    quadratic blowup at the 200k-vector scale point. The oracle replays the anchor-count rule, assignment,
     and the dup rule bit-identically (rounded cosines)."""
     from cds_etl_spark.operators.dedup import semantic_dedup
 
@@ -1577,13 +1576,19 @@ def qs152(spark: SparkSession, sf: str) -> DataFrame:
     # implicit `size > 0` pushdown re-evaluated the interpreted shingle
     # transform per row (guide §1.3; the qs83 fix class). The NULL
     # filter sits ABOVE the Generate (it is on the generated column),
-    # so short documents drop without re-running the transform.
-    sh = spread_scan(d.select("doc_id", "text"), "doc_id").select(
-        "doc_id",
-        F.explode_outer(
-            word_shingles_from_tokens(F.split(F.col("text"), " "), 3)
-        ).alias("s"),
-    ).filter(F.col("s").isNotNull())
+    # so short documents drop without re-running the transform. The
+    # tokens are staged as a column: inline, the split would sit inside
+    # the shingle transform's lambda and re-split the document at every
+    # shingle position.
+    sh = (
+        spread_scan(d.select("doc_id", "text"), "doc_id")
+        .select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
+        .select(
+            "doc_id",
+            F.explode_outer(word_shingles_from_tokens(F.col("_toks"), 3)).alias("s"),
+        )
+        .filter(F.col("s").isNotNull())
+    )
     member = sh.filter(F.col("doc_id") % 10 == 0)
     probe = sh.filter(F.col("doc_id") % 10 != 0)
     bloom = bloom_build(member.select("s"), "s")

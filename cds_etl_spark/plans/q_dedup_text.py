@@ -79,8 +79,8 @@ def qs54(spark: SparkSession, sf: str) -> DataFrame:
     return exact_dedup(load_table(spark, sf, "documents"), "text", "doc_id")
 
 
-# Sliced-hash permutation family (functions.text.minhash_signature):
-# hash j = 8-hex slice j%4 of md5('p<j/4>|' || shingle).
+# Sliced-hash permutation family (functions.text.minhash_digest +
+# minhash_from_digests): hash j = 8-hex slice j%4 of md5('p<j/4>|' || shingle).
 _MINHASH_SIG_SQL = ", ".join(
     f"list_min(list_transform(shset, s -> substr(md5('p{j // 4}|' || s), {1 + 8 * (j % 4)}, 8)))"
     for j in range(12)

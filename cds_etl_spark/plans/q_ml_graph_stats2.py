@@ -628,11 +628,7 @@ def qs262(spark: SparkSession, sf: str) -> DataFrame:
     Determinism: set sizes and min-ownership are exact integers;
     one division, 4 dp. Scale: one explode to distinct (doc, gram)
     — the qs60 shingle shuffle — then a gram-keyed min aggregate
-    joined back on the gram: both shuffles carry the gram key, and
-    at warehouse scale this is exactly the standing shingle-gram
-    table (operators/shingle_index.py) pattern — the explode is
-    paid once at ingest, and this query becomes two aggregates
-    over the index."""
+    joined back on the gram: both shuffles carry the gram key."""
     from cds_etl_spark.operators.skew import spread_scan
 
     d = load_table(spark, sf, "documents")

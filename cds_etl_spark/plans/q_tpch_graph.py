@@ -1069,10 +1069,14 @@ def qs122(spark: SparkSession, sf: str) -> DataFrame:
     # shingles are empty iff the doc has < 3 tokens, and a filter on
     # `_sh` would push below the projection with the interpreted
     # shingle transform substituted in (evaluated once more per row).
+    # The tokens are staged as a column: inline, the split would sit
+    # inside the shingle transform's lambda and re-split the document
+    # at every shingle position.
     d = spread_scan(load_table(spark, sf, "documents"), "doc_id")
-    sh = d.filter(F.size(F.split(F.col("text"), " ")) >= 3).select(
-        "doc_id",
-        word_shingles_from_tokens(F.split(F.col("text"), " "), 3).alias("_sh"),
+    sh = (
+        d.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
+        .filter(F.size("_toks") >= 3)
+        .select("doc_id", word_shingles_from_tokens(F.col("_toks"), 3).alias("_sh"))
     )
     digests = sh.select(
         "doc_id", *[minhash_digest(F.col("_sh"), g).alias(f"_d{g}") for g in range(3)]

@@ -256,29 +256,6 @@ def test_histogram_quantile_merges_by_counter_addition(spark):
     assert (r["total"], r["q50_lo"], r["q90_lo"], r["q99_lo"]) == (1000, 490, 890, 980)
 
 
-def test_semantic_dedup_arrow_matches_exact_path(spark, sf_dir):
-    """The Arrow/BLAS strategy must be result-identical to the exact
-    column-expression path on the shipped corpus — same assignment
-    tie-breaks, same rounding, different physics."""
-    from cds_etl_spark.catalog import load_table
-    from cds_etl_spark.operators.dedup import semantic_dedup, semantic_dedup_arrow
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    anchors = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").cast("array<double>").alias("cvec"),
-    )
-    exact = {
-        (r["vec_id"], r["cid"], bool(r["is_dup"]))
-        for r in semantic_dedup(emb, anchors, threshold=0.4).collect()
-    }
-    arrow = {
-        (r["vec_id"], r["cid"], bool(r["is_dup"]))
-        for r in semantic_dedup_arrow(emb, anchors, threshold=0.4).collect()
-    }
-    assert exact == arrow
-
-
 def test_minhash_fast_family_finds_the_same_duplicates(spark):
     """The xxhash64 fast family must find the same high-jaccard pairs
     as the portable md5 family on a corpus with planted duplicates:

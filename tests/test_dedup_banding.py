@@ -183,48 +183,40 @@ def test_compact_minhash_index_equivalence(spark, tmp_path):
     assert a == b and a
 
 
-def test_winnow_guarantee_planted_shared_run(spark):
-    """The winnowing pigeonhole guarantee, exercised: two documents
-    sharing a planted run of exactly k+w-1 = 8 tokens MUST share at
-    least one fingerprint, wherever the run sits; unrelated random
-    docs share none; selection density is ~2/(w+1); reruns are
-    identical."""
+def test_winnow_guarantee_planted_shared_run(spark, tmp_path):
+    """The winnowing pigeonhole guarantee, exercised on qs177's plan:
+    a shared run of exactly k+w-1 = 8 tokens MUST yield a shared
+    fingerprint wherever it sits. qs177 pairs documents sharing >= 3
+    fingerprints, so two documents share three disjoint planted runs
+    at different offsets; unrelated random documents share none, and
+    reruns are identical."""
     import random
 
-    from cds_etl_spark.operators.dedup import (
-        winnow_fingerprints,
-        winnow_match,
-    )
+    from cds_etl_spark.plans import QUERIES
 
     rng = random.Random(11)
 
     def words(n, tag):
         return [f"{tag}{rng.randrange(10**6)}" for _ in range(n)]
 
-    shared = [f"run{i}" for i in range(8)]  # k+w-1 tokens
+    runs = [[f"run{r}_{i}" for i in range(8)] for r in range(3)]  # k+w-1 tokens
+    offsets = {0: (10, 40, 80), 3: (60, 5, 100)}
     rows = []
     for doc_id in range(6):
         body = words(120, f"d{doc_id}_")
-        if doc_id in (0, 3):  # plant the run at different offsets
-            at = 17 if doc_id == 0 else 83
-            body[at : at + 8] = shared
+        for run, at in zip(runs, offsets.get(doc_id, ())):
+            body[at : at + 8] = run
         rows.append((doc_id, " ".join(body)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = winnow_fingerprints(df)
-    pairs = {
-        (r["id_a"], r["id_b"]): r["shared_fp"]
-        for r in winnow_match(fps, min_shared=1).collect()
-    }
-    assert (0, 3) in pairs  # the GUARANTEE
-    assert all(p == (0, 3) for p in pairs)  # randoms never collide
-    # Density ~ 2/(w+1) = 0.4 of the ~116 k-gram positions per doc.
-    per_doc = fps.groupBy("doc_id").count().collect()
-    for r in per_doc:
-        assert 0.2 * 116 <= r["count"] <= 0.7 * 116
-    # Deterministic reruns.
-    s1 = sorted(map(tuple, fps.collect()))
-    s2 = sorted(map(tuple, winnow_fingerprints(df).collect()))
-    assert s1 == s2
+    sf = str(tmp_path)
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{sf}/documents.parquet"
+    )
+    qs177 = QUERIES["qs177_winnow_fingerprints"]
+    pairs = {(r["doc_a"], r["doc_b"]): r["shared_fp"] for r in qs177(spark, sf).collect()}
+    assert set(pairs) == {(0, 3)}, pairs  # the GUARANTEE; randoms never collide
+    assert pairs[(0, 3)] >= 3
+    again = {(r["doc_a"], r["doc_b"]): r["shared_fp"] for r in qs177(spark, sf).collect()}
+    assert again == pairs
 
 
 def test_probe_minhash_hot_band_guard(spark, tmp_path):

@@ -33,6 +33,7 @@ from cds_etl_spark.operators.text_analysis import (
     quality_features,
     quality_score,
 )
+from cds_etl_spark.plans import QUERIES
 
 # --------------------------------------------------------------------------
 # The multi-pass expressions, as they stood before the one-pass rewrite.
@@ -189,20 +190,28 @@ def test_language_id_and_quality_score_tokenize_once():
         assert str(kernel(F.col("text"))).count("split(") == 1, kernel.__name__
 
 
-def test_decontaminate_stages_tokens(spark):
+def test_decontaminate_stages_tokens(spark, sf_dir):
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox jumps"), (2, "a b c d")], "id int, text string"
     )
     probe = spark.createDataFrame([("quick brown fox",)], "text string")
-    plan = decontaminate(corpus, probe, "id", "text")._jdf.queryExecution().optimizedPlan()
-    lambdas = [
-        lam
-        for node in _plan_nodes(plan)
-        for j in range(node.expressions().size())
-        for lam in _lambdas(node.expressions().apply(j).toString())
-    ]
-    assert lambdas, "expected the shingle transform's lambda in the plan"
-    assert not [lam for lam in lambdas if "split(" in lam], lambdas
+    # The two registry queries that call word_shingles_from_tokens
+    # directly must stage their tokens the same way.
+    frames = {
+        "decontaminate": decontaminate(corpus, probe, "id", "text"),
+        **{q: QUERIES[q](spark, sf_dir)
+           for q in ("qs122_minhash_signatures", "qs152_bloom_decontaminate")},
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan()
+        lambdas = [
+            lam
+            for node in _plan_nodes(plan)
+            for j in range(node.expressions().size())
+            for lam in _lambdas(node.expressions().apply(j).toString())
+        ]
+        assert lambdas, f"{name}: expected the shingle transform's lambda in the plan"
+        assert not [lam for lam in lambdas if "split(" in lam], (name, lambdas)
 
 
 def test_minhash_band_stage_filters_carry_no_digest(spark, monkeypatch):
