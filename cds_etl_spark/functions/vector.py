@@ -35,24 +35,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     """cos(a, b) = a·b / (|a| * |b|)."""
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
-
-def dot_product_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product UNROLLED for a known dimension: a flat
-    ``a[0]*b[0] + … + a[dim-1]*b[dim-1]`` expression tree.
-
-    Same left-to-right double accumulation as :func:`dot_product`
-    (bit-identical results), but expressed as a flat arithmetic tree
-    instead of a HOF (``aggregate`` over ``zip_with`` materializes a
-    zipped array per row). CAUTION (r15 measured): at dim=64 the
-    255-node tree exceeds what whole-stage codegen will inline and is
-    evaluated interpreted — ~2.6 µs/row vs ~0.2 µs/row for the HOF on
-    a 1M-row projection, and 14x slower in a join's pair stage
-    (qs146). Unrolling wins only for SMALL fixed widths or when the
-    alternative is MANY separate HOF passes over one array (the
-    qs402 16-projection shape — BASELINE r13). Prefer
-    :func:`dot_product` for full-width dots."""
-    dot = None
-    for i in range(dim):
-        term = F.element_at(a, i + 1) * F.element_at(b, i + 1)
-        dot = term if dot is None else dot + term
-    return dot

@@ -292,9 +292,9 @@ def embedding_neardup_pairs(
         # self-join, then ONE HOF dot per pair instead of three HOF
         # passes — bit-identical values (same left-to-right double
         # accumulation). r15 second pass: the dot itself is the HOF
-        # form, NOT dot_product_fixed — the unrolled fixed-dim tree
-        # measured ~14x slower per row at dim=64 (codegen bails on
-        # the huge expression; see semantic_dedup).
+        # form — an unrolled fixed-dim ``element_at`` sum measured
+        # ~14x slower per row at dim=64 (codegen bails on the huge
+        # expression).
         v = v.withColumn("_vn", l2_norm(F.col("_v")))
         a, b = v.alias("a"), v.alias("b")
         cond = F.col("a._id") < F.col("b._id")
@@ -913,7 +913,6 @@ def semantic_dedup(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster embeddings, then drop all
     but one representative from every within-cluster near-duplicate
@@ -938,42 +937,30 @@ def semantic_dedup(
 
     Returns (vec_id, cid, is_dup) for every input row.
 
-    ``dim`` (r15, guide §4.3/§8): when the embedding width is a known
-    corpus contract (qs146 passes 64, the same literal qs112's
-    hyperplane SQL hard-codes), both quadratic cosine stages compute
-    L2 norms ONCE per row/anchor BEFORE the crossjoin and evaluate
-    ONE HOF dot per pair instead of three HOF passes (dot + 2 norms)
-    — bit-identical doubles (same left-to-right accumulation, same
-    ``dot / (norm * norm)`` op order), pinned by the existing
-    differential tests. The r15 second pass replaced the first pass's
-    unrolled ``dot_product_fixed`` here: at dim=64 the 255-node tree
-    is beyond codegen's appetite and runs interpreted, ~14x slower
-    per row than the HOF (qs146 pair stage 3.9 s → 0.7 s measured).
+    Both quadratic cosine stages (r15, guide §4.3/§8) compute L2 norms
+    ONCE per row/anchor BEFORE the crossjoin and evaluate ONE HOF dot
+    per pair instead of three HOF passes (dot + 2 norms) — the same
+    left-to-right accumulation and ``dot / (norm * norm)`` op order as
+    ``cosine_similarity``, so the doubles are bit-identical. An
+    unrolled fixed-width ``element_at`` dot was tried here first: at
+    width 64 its 255-node tree is beyond codegen's appetite and runs
+    interpreted, ~14x slower per row than the HOF (qs146 pair stage
+    3.9 s → 0.7 s measured).
     """
+    from cds_etl_spark.operators.skew import spread_scan
+
     v = emb.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_vv")
     )
-    if dim is not None:
-        from cds_etl_spark.operators.skew import spread_scan
-
-        v = spread_scan(v, id_col).withColumn("_vn", l2_norm(F.col("_vv")))
-        anchors = anchors.withColumn("_cn", l2_norm(F.col("cvec")))
-        # r15 second pass: ONE HOF dot per pair, not dot_product_fixed
-        # — the 255-node unrolled tree ran ~14x slower per row at
-        # dim=64 (codegen bails on the huge expression and evaluates
-        # it interpreted; measured 3.9 s → 0.7 s on qs146's 200k-pair
-        # stage). The win of this branch is the PRE-JOIN norms (one
-        # HOF pass per pair instead of three) + spread + pin, and the
-        # HOF accumulates the same left-to-right doubles.
-        _sim = dot_product(F.col("_vv"), F.col("cvec")) / (
-            F.col("_vn") * F.col("_cn")
-        )
-    else:
-        _sim = cosine_similarity(F.col("_vv"), F.col("cvec"))
+    v = spread_scan(v, id_col).withColumn("_vn", l2_norm(F.col("_vv")))
+    anchors = anchors.withColumn("_cn", l2_norm(F.col("cvec")))
+    _sim = dot_product(F.col("_vv"), F.col("cvec")) / (
+        F.col("_vn") * F.col("_cn")
+    )
     scored = v.join(F.broadcast(anchors)).select(
         id_col,
         "_vv",
-        *(["_vn"] if dim is not None else []),
+        "_vn",
         F.col("cid"),
         F.round(_sim, 6).alias("_s"),
     )
@@ -988,7 +975,7 @@ def semantic_dedup(
                     F.col("_vv"),
                     # trailing field: cid above is unique per anchor, so
                     # _vn can never influence the lexicographic argmax
-                    *([F.col("_vn")] if dim is not None else []),
+                    F.col("_vn"),
                 )
             ).alias("_b")
         )
@@ -996,30 +983,25 @@ def semantic_dedup(
             id_col,
             F.col("_b.cid").alias("cid"),
             F.col("_b._vv").alias("_vv"),
-            *([F.col("_b._vn").alias("_vn")] if dim is not None else []),
+            F.col("_b._vn").alias("_vn"),
         )
     )
     assigned = cut_lineage(assigned, eager=False)  # pin: corpus-scale
-    if dim is not None:
-        # Pin the pair join's cid exchange ABOVE the checkpoint (a
-        # checkpoint scan reports UnknownPartitioning, so a repartition
-        # below it is erased and the SMJ re-exchanges): without the
-        # pin, AQE coalesces the tiny cid shuffle to ONE partition and
-        # the whole quadratic within-cluster compare — with the cosine
-        # filter pushed into the join condition — runs in a single
-        # task (guide §2.5). The explicit numPartitions blocks AQE
-        # coalescing; parallelism is bounded by the anchor count,
-        # which scales as corpus/200 by design.
-        npart = emb.sparkSession.sparkContext.defaultParallelism * 4
-        assigned = assigned.repartition(npart, "cid")
+    # Pin the pair join's cid exchange ABOVE the checkpoint (a
+    # checkpoint scan reports UnknownPartitioning, so a repartition
+    # below it is erased and the SMJ re-exchanges): without the pin,
+    # AQE coalesces the tiny cid shuffle to ONE partition and the whole
+    # quadratic within-cluster compare — with the cosine filter pushed
+    # into the join condition — runs in a single task (guide §2.5). The
+    # explicit numPartitions blocks AQE coalescing; parallelism is
+    # bounded by the anchor count, which scales as corpus/200 by design.
+    npart = emb.sparkSession.sparkContext.defaultParallelism * 4
+    assigned = assigned.repartition(npart, "cid")
     a = assigned.alias("a")
     b = assigned.alias("b")
-    if dim is not None:
-        _pair_cos = dot_product(F.col("a._vv"), F.col("b._vv")) / (
-            F.col("a._vn") * F.col("b._vn")
-        )
-    else:
-        _pair_cos = cosine_similarity(F.col("a._vv"), F.col("b._vv"))
+    _pair_cos = dot_product(F.col("a._vv"), F.col("b._vv")) / (
+        F.col("a._vn") * F.col("b._vn")
+    )
     dup_ids = (
         a.join(
             b,

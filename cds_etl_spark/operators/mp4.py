@@ -1,25 +1,17 @@
 """ISO-BMFF (MP4, ISO/IEC 14496-12) container layer in pure stdlib.
 
-Splits the r5 "jpeg/mp4 gated" boundary at the honest line: the
-CONTAINER is simple public structure (length-prefixed box tree +
-sample tables), so parsing it pure-Python is the same move as the
-PPM/PNG/WAV/JPEG codecs — while the CODEC inside (H.264/H.265 CABAC)
-genuinely needs external libraries and stays gated.
+The CONTAINER is simple public structure (a length-prefixed box tree
+plus sample tables), so it parses in pure Python, the same move as the
+PPM/PNG/WAV/JPEG decoders — while the CODEC inside (H.264/H.265 CABAC)
+genuinely needs an external library and stays behind the PyAV gate in
+``multimodal._decode_bytes``.
 
-What this enables at pipeline level: real video work sharding. A
-100 TB video corpus is sampled/sharded at the container level — walk
-``stbl`` (stsz/stsc/stco) to turn a blob into per-frame byte ranges,
-keep every k-th sample, and only THEN hand surviving payloads to a
-decoder. ``multimodal.sample_frames`` uses exactly this for
-``format='mp4'`` rows: extraction is real container parsing; payload
-decode remains format-dependent (raw payloads decode, H.264 raises).
-
-Writer (``encode_mp4``) emits a minimal valid single-track file —
-ftyp / mdat / moov(mvhd, trak(tkhd, mdia(mdhd, hdlr, minf(vmhd, dinf,
-stbl(stsd, stts, stsc, stsz, stco))))) — with the payload codec
-declared by its sample-entry fourcc ('raw ' for the synthetic raw
-frames). Any box walker can parse the result; tests assert the
-structure box by box.
+``probe_mp4`` reads the track metadata (codec fourcc, size, sample
+count, fps) and ``extract_samples`` walks ``stbl`` (stsz/stsc/stco) to
+turn a blob into per-sample byte ranges: the container-level split a
+video pipeline shards on BEFORE any codec runs. ``_decode_bytes``
+returns the joined samples of a raw-codec or empty track and hands
+compressed tracks to PyAV.
 """
 
 from __future__ import annotations
@@ -27,96 +19,6 @@ from __future__ import annotations
 import struct
 
 _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf", b"edts"}
-
-
-def _box(btype: bytes, payload: bytes) -> bytes:
-    return struct.pack(">I", len(payload) + 8) + btype + payload
-
-
-def _full(btype: bytes, version: int, flags: int, payload: bytes) -> bytes:
-    return _box(btype, struct.pack(">B3s", version, flags.to_bytes(3, "big")) + payload)
-
-
-_UNITY_MATRIX = struct.pack(
-    ">9i", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000
-)
-
-
-def encode_mp4(
-    frames: list[bytes],
-    width: int,
-    height: int,
-    fps: int = 24,
-    codec: bytes = b"raw ",
-) -> bytes:
-    """Write frames as one-sample-per-frame single-chunk mp4."""
-    timescale = fps * 1000
-    delta = 1000
-    duration = delta * len(frames)
-    mdat_payload = b"".join(frames)
-
-    mvhd = _full(
-        b"mvhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
-        + struct.pack(">iH", 0x00010000, 0x0100)
-        + b"\x00" * 10
-        + _UNITY_MATRIX
-        + b"\x00" * 24
-        + struct.pack(">I", 2),
-    )
-    tkhd = _full(
-        b"tkhd", 0, 7,
-        struct.pack(">IIIII", 0, 0, 1, 0, duration)
-        + b"\x00" * 8
-        + struct.pack(">hhhh", 0, 0, 0, 0)
-        + _UNITY_MATRIX
-        + struct.pack(">II", width << 16, height << 16),
-    )
-    mdhd = _full(
-        b"mdhd", 0, 0,
-        struct.pack(">IIII", 0, 0, timescale, duration)
-        + struct.pack(">HH", 0x55C4, 0),  # language 'und'
-    )
-    hdlr = _full(
-        b"hdlr", 0, 0,
-        struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"VideoHandler\x00",
-    )
-    sample_entry = _box(
-        codec,
-        b"\x00" * 6
-        + struct.pack(">H", 1)          # data_reference_index
-        + b"\x00" * 16                   # predefined/reserved
-        + struct.pack(">HH", width, height)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + b"\x00" * 4
-        + struct.pack(">H", 1)          # frame_count
-        + b"\x00" * 32                   # compressorname
-        + struct.pack(">Hh", 0x0018, -1),
-    )
-    stsd = _full(b"stsd", 0, 0, struct.pack(">I", 1) + sample_entry)
-    stts = _full(b"stts", 0, 0, struct.pack(">III", 1, len(frames), delta))
-    stsc = _full(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, len(frames), 1))
-    stsz = _full(
-        b"stsz", 0, 0,
-        struct.pack(">II", 0, len(frames))
-        + b"".join(struct.pack(">I", len(f)) for f in frames),
-    )
-    # ftyp is fixed-size; mdat payload starts right after its 8-byte
-    # mdat header — stco can point backward at it.
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
-    chunk_offset = len(ftyp) + 8
-    stco = _full(b"stco", 0, 0, struct.pack(">II", 1, chunk_offset))
-
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    vmhd = _full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-    dref = _full(b"dref", 0, 0, struct.pack(">I", 1) + _full(b"url ", 0, 1, b""))
-    dinf = _box(b"dinf", dref)
-    minf = _box(b"minf", vmhd + dinf + stbl)
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    trak = _box(b"trak", tkhd + mdia)
-    moov = _box(b"moov", mvhd + trak)
-    mdat = _box(b"mdat", mdat_payload)
-    return ftyp + mdat + moov
 
 
 def parse_boxes(buf: bytes, start: int = 0, end: int | None = None) -> list[dict]:

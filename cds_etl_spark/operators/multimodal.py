@@ -1,33 +1,36 @@
-"""Multimodal (image/audio/video) columns over Spark.
+"""Media decode and perceptual-hash near-duplicate detection over Spark.
 
 Media is carried as an opaque ``binary`` column plus a typed metadata
-struct — the pattern that scales to 100 TB: Spark never interprets the
-bytes; Parquet stores them page-compressed; all decode/compute happens
-in Arrow-batched Python (``mapInPandas``), executor-side, with batch
-size bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a
+struct (``MEDIA_SCHEMA``): Spark never interprets the bytes; Parquet
+stores them page-compressed; all decode/compute happens in
+Arrow-batched Python (``mapInPandas``), executor-side, with batch size
+bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a
 partition of large blobs never materializes as one giant pandas frame.
 
 The reference has no media handling at all (its closest surface is
 opaque file rows with ``file_size``/``md5sum`` metadata,
 3-Model-Files/cds-model.yml:144-162); this module is part of the
-declared LLM-pipeline extension surface.
+declared LLM-pipeline extension surface, and its one entry point is
+the continuous image ingest ``streaming/ops.stream_media_ingest_with_index``.
 
-Codecs: formats whose containers need only numpy + the stdlib are
-decoded/encoded FOR REAL — binary PPM/PGM images
-(``decode_ppm``/``encode_ppm``), PCM16 WAV audio
-(``decode_wav``/``encode_wav``), PNG (``decode_png``/
-``encode_png`` — zlib inflate + the five scanline filters, color
-types 0/2/4/6 at bit depth 8, non-interlaced), and baseline JPEG
-(``operators/jpeg.py`` — full T.81 baseline sequential: quality-scaled
-Annex K quantization, canonical Huffman, 4:4:4 and 4:2:0 sampling,
-restart-marker-aware decode); the synthetic media table emits genuine
-container bytes for all four. The mp4 container parses for real
-(``operators/mp4.py``); the one remaining gate is H.264 entropy
-decode, far beyond pure-numpy scope, which PyAV does when installed.
-Synthetic video payloads stay a clearly-marked raw-frame fake. The
-Spark-side contract — schemas, UDF signatures, Arrow batch iteration,
-explode shapes, partition behavior — is identical across real and
-stubbed codecs.
+Surface:
+
+* ``_decode_bytes`` — one dispatch on ``meta.format``. Formats whose
+  containers need only numpy + the stdlib decode for real: binary
+  PPM/PGM (``decode_ppm``), PCM16 WAV (``decode_wav``), PNG
+  (``decode_png`` — zlib inflate + the five scanline filters, color
+  types 0/2/4/6 at bit depth 8, non-interlaced) and JPEG
+  (``operators/jpeg.py`` — baseline, progressive and lossless T.81).
+  The mp4 container parses for real (``operators/mp4.py``); H.264
+  entropy decode has one gate and runs through PyAV when it is
+  installed. Any other format raises ``no codec for format=…``.
+* ``phash64`` / ``phash_images`` — a 64-bit DCT perceptual hash per
+  image row.
+* ``hamming_near_dup`` — within-batch near-duplicate pairs by a
+  pigeonhole-banded Hamming join.
+* The persisted pHash index: ``build_phash_index`` (overwrite or
+  append, with its band-occupancy stats), ``probe_phash_index`` and
+  the maintenance pass ``compact_phash_index``.
 """
 
 from __future__ import annotations
@@ -37,27 +40,18 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cds_etl_spark.operators.pin import cut_lineage
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-try:  # real decoder path — not present in this container
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
 
 # Typed metadata carried alongside the opaque bytes. A media table is
 # (media_id long, kind string, content binary, meta MEDIA_META).
@@ -82,7 +76,7 @@ MEDIA_SCHEMA = StructType(
 
 
 # ---------------------------------------------------------------------------
-# Real pure-numpy codecs: binary PPM/PGM (netpbm P6/P5) and PCM16 WAV.
+# Pure-numpy decoders: binary PPM/PGM (netpbm P6/P5), PCM16 WAV, PNG.
 # ---------------------------------------------------------------------------
 
 
@@ -122,19 +116,6 @@ def decode_ppm(content: bytes) -> np.ndarray:
     return pixels.reshape((h, w, 3) if channels == 3 else (h, w)).copy()
 
 
-def encode_ppm(arr: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_ppm`: (h, w, 3) → P6, (h, w) → P5."""
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim == 3 and arr.shape[2] == 3:
-        magic = b"P6"
-    elif arr.ndim == 2:
-        magic = b"P5"
-    else:
-        raise ValueError(f"expected (h,w,3) or (h,w), got {arr.shape}")
-    h, w = arr.shape[0], arr.shape[1]
-    return magic + f"\n{w} {h}\n255\n".encode() + arr.tobytes()
-
-
 def decode_wav(content: bytes) -> tuple[np.ndarray, int]:
     """PCM16 RIFF/WAVE decode → ((n_samples, channels) int16, rate).
     Walks the chunk list, so extra chunks (LIST/INFO...) are fine."""
@@ -158,24 +139,6 @@ def decode_wav(content: bytes) -> tuple[np.ndarray, int]:
         raise ValueError("missing fmt/data chunk")
     samples = np.frombuffer(data, dtype="<i2")
     return samples.reshape(-1, channels).copy(), int(rate)
-
-
-def encode_wav(samples: np.ndarray, rate: int) -> bytes:
-    """Inverse of :func:`decode_wav`: int16 (n,) or (n, ch) → PCM16 WAV."""
-    import struct
-
-    arr = np.asarray(samples, dtype="<i2")
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    channels = arr.shape[1]
-    data = arr.tobytes()
-    byte_rate = rate * channels * 2
-    hdr = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, channels, rate, byte_rate, channels * 2, 16)
-        + b"data" + struct.pack("<I", len(data))
-    )
-    return hdr + data
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -270,143 +233,23 @@ def decode_png(content: bytes) -> np.ndarray:
     return pixels.reshape(h, w) if ch == 1 else pixels.reshape(h, w, ch)
 
 
-def encode_png(arr: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_png`: (h, w) → gray, (h, w, 2) →
-    gray+alpha, (h, w, 3) → RGB, (h, w, 4) → RGBA; 8-bit,
-    non-interlaced, filter 0 scanlines (decoders must accept any
-    filter, encoders may pick the simplest)."""
-    import struct
-    import zlib
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        color, ch = 0, 1
-    elif arr.ndim == 3 and arr.shape[2] in (2, 3, 4):
-        color = {2: 4, 3: 2, 4: 6}[arr.shape[2]]
-        ch = arr.shape[2]
-    else:
-        raise ValueError(f"expected (h,w[,2|3|4]) uint8, got {arr.shape}")
-    h, w = arr.shape[0], arr.shape[1]
-    body = arr.reshape(h, w * ch)
-    raw = b"".join(b"\x00" + body[y].tobytes() for y in range(h))
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def synthetic_media(spark, n: int = 64, partitions: int = 8) -> DataFrame:
-    """Deterministic media table (seeded by media_id) for tests and
-    demos: images are REAL binary PPMs, audio REAL PCM16 WAVs (both
-    decodable by anything, not just this module); video payloads are
-    raw concatenated fake frames (no pure-numpy container exists).
-    Generated distributed (spark.range), not driver-side."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kinds = ["image", "audio", "video"]
-        for pdf in batches:
-            rows = []
-            for mid in pdf["id"]:
-                rng = np.random.default_rng(int(mid))
-                kind = kinds[int(mid) % 3]
-                w, h = int(rng.integers(8, 64)), int(rng.integers(8, 64))
-                nf = int(rng.integers(4, 32)) if kind == "video" else 1
-                sr = 16000 if kind == "audio" else 0
-                if kind == "image":
-                    # Rotate the real container formats so every image
-                    # consumer exercises all three codec paths (jpeg is
-                    # lossy — consumers must treat pixels as decoded
-                    # content, not expect the raw rng values back).
-                    fmt = ("ppm", "png", "jpeg")[(int(mid) // 3) % 3]
-                    pixels = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                    if fmt == "ppm":
-                        content = encode_ppm(pixels)
-                    elif fmt == "png":
-                        content = encode_png(pixels)
-                    else:
-                        from cds_etl_spark.operators.jpeg import encode_jpeg
-
-                        content = encode_jpeg(pixels, quality=90)
-                elif kind == "audio":
-                    fmt = "wav"
-                    samples = rng.integers(-32768, 32768, size=1024).astype("<i2")
-                    content = encode_wav(samples, sr)
-                elif (int(mid) // 3) % 2 == 0:
-                    fmt = "fake"
-                    content = rng.integers(
-                        0, 256, size=w * h, dtype=np.uint8
-                    ).tobytes()
-                else:
-                    # Real ISO-BMFF container around raw frame
-                    # payloads: the sample table is genuine (any box
-                    # walker parses it); the payload codec is declared
-                    # 'raw ' — container real, codec honest.
-                    from cds_etl_spark.operators.mp4 import encode_mp4
-
-                    fmt = "mp4"
-                    content = encode_mp4(
-                        [
-                            rng.integers(0, 256, w * h, dtype=np.uint8).tobytes()
-                            for _ in range(nf)
-                        ],
-                        w,
-                        h,
-                    )
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "kind": kind,
-                        "content": content,
-                        "meta": {
-                            "format": fmt,
-                            "width": w,
-                            "height": h,
-                            "sample_rate": sr,
-                            "n_frames": nf,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return (
-        spark.range(0, n, 1, partitions)
-        .mapInPandas(_gen, schema=MEDIA_SCHEMA)
-    )
-
-
-def _decode_video_av(
-    content: bytes, every_k: int = 1
-) -> "list[np.ndarray] | None":
+def _decode_video_av(content: bytes) -> "list[np.ndarray] | None":
     """Decode a real-codec (H.264/H.265/…) video via PyAV when it is
-    importable, else return None (callers fall back to their gate).
-    Returns every ``every_k``-th frame as an (H, W, 3) uint8 RGB
-    array. Import-gated on purpose: the sandbox ships no codec
-    libraries, so PyAV presence is an environment property — the
-    Spark-side plumbing (schema, batching, sharding) is identical
-    either way and is what the tests pin."""
+    importable, else return None (the caller falls back to its gate).
+    Returns every frame as an (H, W, 3) uint8 RGB array. PyAV is an
+    optional dependency, so this decode path is import-gated."""
     try:
         import av  # PyAV — optional, not in the default environment
     except ImportError:
         return None
     import io
 
-    frames: list[np.ndarray] = []
     with av.open(io.BytesIO(content)) as container:
         stream = container.streams.video[0]
-        for i, frame in enumerate(container.decode(stream)):
-            if i % every_k == 0:
-                frames.append(frame.to_ndarray(format="rgb24"))
-    return frames
+        return [
+            frame.to_ndarray(format="rgb24")
+            for frame in container.decode(stream)
+        ]
 
 
 def _video_codec_gate(codec: str) -> NotImplementedError:
@@ -422,7 +265,7 @@ def _decode_bytes(content: bytes, fmt: str) -> np.ndarray:
     """Decode media bytes to a pixel/sample array.
 
     ``ppm``/``pgm``, ``png``, ``jpeg``, and ``wav`` decode for real
-    (pure numpy+stdlib — jpeg via operators/jpeg.py baseline T.81).
+    (pure numpy+stdlib — jpeg via operators/jpeg.py).
     ``fake`` is raw uint8 (video frame payloads). ``mp4`` parses its
     container for real (operators/mp4.py): raw-codec and zero-sample
     tracks return their joined sample bytes, and compressed samples
@@ -457,183 +300,11 @@ def _decode_bytes(content: bytes, fmt: str) -> np.ndarray:
         if frames is not None:
             return np.stack(frames) if frames else np.zeros((0,), np.uint8)
         raise _video_codec_gate(info["codec"])
-    if _HAVE_PIL:
-        raise NotImplementedError("real decoder wiring reserved for PIL builds")
-    raise NotImplementedError(
-        f"no codec for format={fmt!r}: video codec libraries are not installed"
-    )
-
-
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("mean_intensity", FloatType()),
-        StructField("std_intensity", FloatType()),
-        StructField("embedding", ArrayType(FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """Per-media feature extraction: decode → intensity stats → a
-    deterministic ``dim``-float signature (histogram of the decoded
-    array, L2-normalized — a stand-in with the exact shape of a real
-    model embedding).
-
-    ``mapInPandas``: one Arrow batch in, one out — no shuffle, scales
-    with input partitioning. The projection (media_id, kind, content,
-    meta.format) is column-pruned at the scan."""
-
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                arr = _decode_bytes(row["content"], row["fmt"]).ravel()
-                if arr.dtype == np.int16:
-                    # Audio samples → the same 0..255 intensity scale
-                    # as pixels, so one histogram signature covers all
-                    # modalities.
-                    arr = ((arr.astype(np.float64) + 32768.0) / 257.0)
-                hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                norm = float(np.sqrt((hist.astype("float64") ** 2).sum())) or 1.0
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "kind": row["kind"],
-                        "n_bytes": len(row["content"]),
-                        "mean_intensity": float(arr.mean()) if arr.size else 0.0,
-                        "std_intensity": float(arr.std()) if arr.size else 0.0,
-                        "embedding": (hist / norm).astype("float32").tolist(),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    pruned = df.select(
-        "media_id", "kind", "content", F.col("meta.format").alias("fmt")
-    )
-    return pruned.mapInPandas(_feat, schema=FEATURES_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize the image rows to (width, height) via nearest-neighbor
-    index sampling on the decoded pixel array — a real decode →
-    transform → re-encode round trip for PPM/PGM bytes (legacy 'fake'
-    grayscale payloads resize as raw rasters). Non-image rows pass
-    through unchanged."""
-    schema = df.schema
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf.index:
-                meta = pdf.at[i, "meta"]
-                if pdf.at[i, "kind"] != "image" or meta is None:
-                    continue
-                meta = dict(meta)
-                arr = _decode_bytes(pdf.at[i, "content"], meta["format"])
-                if arr.ndim == 1:  # fake raw raster
-                    arr = arr.reshape(meta["height"], meta["width"])
-                h0, w0 = arr.shape[0], arr.shape[1]
-                ry = (np.arange(height) * h0 // height).clip(0, h0 - 1)
-                rx = (np.arange(width) * w0 // width).clip(0, w0 - 1)
-                resized = arr[np.ix_(ry, rx)].astype(np.uint8)
-                if meta["format"] in ("ppm", "pgm"):
-                    pdf.at[i, "content"] = encode_ppm(resized)
-                elif meta["format"] == "png":
-                    pdf.at[i, "content"] = encode_png(resized)
-                elif meta["format"] in ("jpeg", "jpg"):
-                    from cds_etl_spark.operators.jpeg import encode_jpeg
-
-                    pdf.at[i, "content"] = encode_jpeg(resized, quality=90)
-                else:
-                    pdf.at[i, "content"] = resized.tobytes()
-                meta["width"], meta["height"] = width, height
-                pdf.at[i, "meta"] = meta
-            yield pdf
-
-    return df.mapInPandas(_resize, schema=schema)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(df: DataFrame, every_k: int = 4) -> DataFrame:
-    """Sample every k-th frame of video rows → one output row per kept
-    frame (a 1→N ``mapInPandas`` explode; output row count is
-    data-dependent, which ``mapInPandas`` supports and ``pandas_udf``
-    does not). Frame partitioning inherits from the input — at scale,
-    repartition upstream by media_id if frames feed a per-video
-    aggregation, so that stage shuffles frame *references* not blobs."""
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                if row["kind"] != "video":
-                    continue
-                meta = row["meta"]
-                nf = int(meta["n_frames"]) or 1
-                if meta["format"] == "mp4":
-                    # Real container-level split: per-sample byte
-                    # ranges from the stbl sample table — the shard
-                    # step a video pipeline runs BEFORE any codec.
-                    from cds_etl_spark.operators.mp4 import (
-                        extract_samples,
-                        probe_mp4,
-                    )
-
-                    content = bytes(row["content"])
-                    if probe_mp4(content)["codec"] != "raw":
-                        # Real codec: decode end-to-end when PyAV is
-                        # importable (frame = RGB pixels); otherwise
-                        # keep the encoded access units — the shard
-                        # step still works, decode stays gated.
-                        decoded = _decode_video_av(content, every_k)
-                        if decoded is not None:
-                            for j, arr in enumerate(decoded):
-                                out.append(
-                                    {
-                                        "media_id": row["media_id"],
-                                        "frame_idx": j * every_k,
-                                        "frame": arr.tobytes(),
-                                    }
-                                )
-                            continue
-                    samples = extract_samples(content)
-                    for fi in range(0, len(samples), every_k):
-                        out.append(
-                            {
-                                "media_id": row["media_id"],
-                                "frame_idx": fi,
-                                "frame": samples[fi],
-                            }
-                        )
-                    continue
-                arr = _decode_bytes(row["content"], meta["format"])
-                frame_len = max(len(arr) // nf, 1)
-                for fi in range(0, nf, every_k):
-                    chunk = arr[fi * frame_len : (fi + 1) * frame_len]
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": fi,
-                            "frame": chunk.tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame"])
-
-    return df.mapInPandas(_frames, schema=FRAME_SCHEMA)
+    raise NotImplementedError(f"no codec for format={fmt!r}")
 
 
 # ---------------------------------------------------------------------------
-# Perceptual image hashing (pHash) and audio signal features.
+# Perceptual image hashing (pHash) and the persisted pHash index.
 # ---------------------------------------------------------------------------
 
 
@@ -655,7 +326,7 @@ def phash64(pixels: np.ndarray) -> int:
     """64-bit perceptual hash of an image array (H×W or H×W×C uint8).
 
     The classic pHash recipe: grayscale → 32×32 downsample
-    (nearest-neighbor index sampling, same kernel as resize_images) →
+    (nearest-neighbor index sampling) →
     2-D DCT-II → keep the top-left 8×8 low-frequency block → each bit
     is coeff > median of the 63 AC coefficients (DC excluded: it is
     plain brightness, and including it would make the hash flip under
@@ -817,74 +488,6 @@ def hamming_near_dup(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("duration_s", FloatType()),
-        StructField("rms", FloatType()),
-        StructField("zero_cross_rate", FloatType()),
-        StructField("silence_frac", FloatType()),
-    ]
-)
-
-
-def extract_audio_features(
-    df: DataFrame, frame: int = 256, silence_threshold: float = 0.01
-) -> DataFrame:
-    """Per-clip audio quality signals — the filters an audio-corpus
-    pipeline gates on before transcription: RMS level (too quiet →
-    drop), zero-crossing rate (crude speech/noise discriminator), and
-    silence fraction (frames whose RMS is below ``silence_threshold``
-    of full scale — mostly-silent clips waste training tokens).
-
-    Decodes real PCM16 WAV bytes executor-side (``decode_wav``), all
-    numpy, Arrow-batched ``mapInPandas`` on a pruned projection; no
-    shuffle, output is one narrow row per clip."""
-
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                samples, rate = decode_wav(bytes(row["content"]))
-                # Mono-mix first (decode_wav returns (n_samples,
-                # channels)): n must count FRAMES, not samples ×
-                # channels, or stereo duration doubles and the framed
-                # reshape below breaks on multi-channel clips.
-                x = samples.astype(np.float64).mean(axis=1) / 32768.0
-                n = x.size
-                rms = float(np.sqrt(np.mean(x**2))) if n else 0.0
-                zcr = (
-                    float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                    if n > 1
-                    else 0.0
-                )
-                nf = n // frame
-                if nf:
-                    frames = x[: nf * frame].reshape(nf, frame)
-                    frms = np.sqrt((frames**2).mean(axis=1))
-                    silence = float((frms < silence_threshold).mean())
-                else:
-                    silence = 1.0 if rms < silence_threshold else 0.0
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "n_samples": n,
-                        "sample_rate": rate,
-                        "duration_s": float(n / rate) if rate else 0.0,
-                        "rms": rms,
-                        "zero_cross_rate": zcr,
-                        "silence_frac": silence,
-                    }
-                )
-            yield pd.DataFrame(out, columns=cols)
-
-    pruned = df.filter(F.col("kind") == "audio").select("media_id", "content")
-    return pruned.mapInPandas(_feats, schema=AUDIO_FEATURES_SCHEMA)
 
 
 def _auto_phash_band_cap(
@@ -1210,134 +813,6 @@ def probe_phash_index(
     )
 
 
-IMAGE_QUALITY_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("brightness", FloatType()),
-        StructField("contrast", FloatType()),
-        StructField("sharpness", FloatType()),
-        StructField("gray_entropy", FloatType()),
-    ]
-)
-
-
-def image_quality_features(df: DataFrame) -> DataFrame:
-    """Per-image quality gates — the filters an image-corpus pipeline
-    drops on before captioning/training (the LAION-style pass):
-
-    * ``brightness`` — mean gray level (reject near-black/blown-out);
-    * ``contrast`` — gray std (reject flat images);
-    * ``sharpness`` — variance of the 4-neighbour Laplacian, THE
-      standard blur detector (a gaussian-blurred copy of an image
-      scores an order of magnitude lower);
-    * ``gray_entropy`` — Shannon entropy of the 256-bin gray histogram
-      in bits (synthetic/flat graphics score low, photos high).
-
-    Pure-numpy decode + vectorized filters, Arrow-batched
-    ``mapInPandas`` on a pruned (media_id, content, format)
-    projection — no shuffle; at corpus scale the cost is the decode."""
-
-    def _q(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in IMAGE_QUALITY_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                arr = _decode_bytes(row["content"], row["fmt"])
-                g = arr.astype(np.float64)
-                if g.ndim == 3:
-                    g = g.mean(axis=2)
-                h, w = g.shape
-                lap = (
-                    4 * g[1:-1, 1:-1]
-                    - g[:-2, 1:-1]
-                    - g[2:, 1:-1]
-                    - g[1:-1, :-2]
-                    - g[1:-1, 2:]
-                ) if min(h, w) >= 3 else np.zeros((1, 1))
-                hist, _ = np.histogram(g, bins=256, range=(0, 256))
-                p = hist[hist > 0] / g.size
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "width": w,
-                        "height": h,
-                        "brightness": float(g.mean()),
-                        "contrast": float(g.std()),
-                        "sharpness": float(lap.var()),
-                        "gray_entropy": float(-(p * np.log2(p)).sum()),
-                    }
-                )
-            yield pd.DataFrame(out, columns=cols)
-
-    pruned = df.filter(F.col("kind") == "image").select(
-        "media_id", "content", F.col("meta.format").alias("fmt")
-    )
-    return pruned.mapInPandas(_q, schema=IMAGE_QUALITY_SCHEMA)
-
-
-SPECTRAL_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("spectral_centroid_hz", FloatType()),
-        StructField("dominant_freq_hz", FloatType()),
-        StructField("high_freq_ratio", FloatType()),
-    ]
-)
-
-
-def extract_spectral_features(
-    df: DataFrame, high_cut_hz: float = 4000.0
-) -> DataFrame:
-    """Spectral audio signals via numpy rFFT — the frequency-domain
-    complements to ``extract_audio_features``' time-domain gates:
-    spectral centroid (speech sits ~300–3000 Hz; hiss and tones
-    elsewhere), dominant frequency (single-tone detector — test
-    signals, dial tones, alarm loops), and the energy fraction above
-    ``high_cut_hz`` (codec artifacts/noise). Mono-mixed before the
-    FFT; Arrow-batched, no shuffle."""
-
-    def _s(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SPECTRAL_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                samples, rate = decode_wav(bytes(row["content"]))
-                x = samples.astype(np.float64).mean(axis=1)
-                n = x.size
-                if n < 2 or rate <= 0:
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "spectral_centroid_hz": 0.0,
-                            "dominant_freq_hz": 0.0,
-                            "high_freq_ratio": 0.0,
-                        }
-                    )
-                    continue
-                mag = np.abs(np.fft.rfft(x))
-                freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                power = mag**2
-                tot = power.sum() or 1.0
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "spectral_centroid_hz": float(
-                            (freqs * power).sum() / tot
-                        ),
-                        "dominant_freq_hz": float(freqs[int(power.argmax())]),
-                        "high_freq_ratio": float(
-                            power[freqs > high_cut_hz].sum() / tot
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out, columns=cols)
-
-    pruned = df.filter(F.col("kind") == "audio").select("media_id", "content")
-    return pruned.mapInPandas(_s, schema=SPECTRAL_SCHEMA)
-
-
 def compact_phash_index(spark, path: str, out_path: str) -> None:
     """Maintenance pass for an append-only pHash index: rewrite
     deduplicated (one row per media_id) to ``out_path`` — probe
@@ -1354,221 +829,3 @@ def compact_phash_index(spark, path: str, out_path: str) -> None:
     # Compaction is the stats-refresh point for ingest loops that
     # append with band_stats=False.
     write_phash_band_stats(spark, out_path)
-
-
-SCENE_CUT_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_diff", FloatType()),
-        StructField("is_cut", StringType()),
-    ]
-)
-
-
-def detect_scene_cuts(df: DataFrame, threshold: float = 30.0) -> DataFrame:
-    """Scene-cut detection per video: mean absolute pixel difference
-    between consecutive frames; a frame whose diff exceeds
-    ``threshold`` gray levels starts a new shot. THE standard first
-    pass of a video-corpus pipeline — frame sampling (sample_frames)
-    should take shot boundaries, not a blind every-k, so near-static
-    shots contribute one frame instead of hundreds of near-duplicates.
-
-    A video's frames live in ONE row (container blob), so the
-    consecutive-frame comparison is row-local inside the Arrow batch —
-    no window over frame rows, no shuffle at all. Container-level
-    frame splitting (mp4 sample table / fixed-size fake payloads)
-    needs no codec; emits one row per frame transition with
-    ``is_cut`` as 'cut'/'run' (string enum keeps the schema
-    oracle-friendly)."""
-
-    def _cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SCENE_CUT_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"]
-                nf = max(int(meta["n_frames"]) or 1, 1)
-                if meta["format"] == "mp4":
-                    from cds_etl_spark.operators.mp4 import extract_samples
-
-                    frames = [
-                        np.frombuffer(s, dtype=np.uint8).astype(np.float64)
-                        for s in extract_samples(bytes(row["content"]))
-                    ]
-                else:
-                    arr = _decode_bytes(row["content"], meta["format"])
-                    flen = max(len(arr) // nf, 1)
-                    frames = [
-                        arr[i * flen : (i + 1) * flen].astype(np.float64)
-                        for i in range(nf)
-                    ]
-                for i in range(1, len(frames)):
-                    a, b = frames[i - 1], frames[i]
-                    n = min(a.size, b.size)
-                    d = float(np.abs(a[:n] - b[:n]).mean()) if n else 0.0
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": i,
-                            "frame_diff": d,
-                            "is_cut": "cut" if d > threshold else "run",
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols)
-
-    pruned = df.filter(F.col("kind") == "video").select(
-        "media_id", "content", "meta"
-    )
-    return pruned.mapInPandas(_cuts, schema=SCENE_CUT_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Audio fingerprinting (landmark hashing) — content-based audio dedup
-# --------------------------------------------------------------------------
-
-AUDIO_FP_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("fp_hash", LongType()),
-        StructField("t", IntegerType()),
-    ]
-)
-
-
-def audio_fingerprints(
-    df: DataFrame,
-    frame: int = 512,
-    hop: int = 256,
-    peaks_per_frame: int = 3,
-    fanout: int = 3,
-    max_dt: int = 32,
-) -> DataFrame:
-    """Landmark audio fingerprints (the classic spectral-peak-pair
-    scheme of Wang 2003, "An Industrial-Strength Audio Search
-    Algorithm"): STFT magnitude → per-frame local-maximum peaks →
-    anchor/target peak pairs hashed as (f1, f2, Δt). A clip becomes a
-    sparse set of (hash, anchor_time) rows — robust to level changes
-    (peaks are relative maxima) and to time offset (Δt is
-    anchor-relative; absolute offset is recovered at match time).
-    This is the audio twin of ``phash64``: content-addressed identity
-    that survives re-encoding, gain changes, and padding.
-
-    Determinism: the spectrum is a fixed Hann-windowed numpy rFFT;
-    peaks are STRICT local maxima ranked by (−magnitude, bin) via
-    lexsort — stable under ties; pairing walks peaks in (t, bin)
-    order taking the first ``fanout`` targets within ``max_dt``
-    frames. Identical bytes → identical hash sets on any platform.
-
-    Scale: Arrow-batched ``mapInPandas`` over a pruned
-    (media_id, content) projection, zero shuffle; output is
-    O(peaks × fanout) narrow rows per clip — the downstream match is
-    a hash equi-join, never an all-pairs signal comparison."""
-
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FP_SCHEMA.fields]
-        win = np.hanning(frame)
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                samples, _rate = decode_wav(bytes(row["content"]))
-                x = samples.astype(np.float64).mean(axis=1) / 32768.0
-                if x.size < frame:
-                    continue
-                nf = (x.size - frame) // hop + 1
-                idx = (
-                    np.arange(nf)[:, None] * hop
-                    + np.arange(frame)[None, :]
-                )
-                spec = np.abs(np.fft.rfft(x[idx] * win, axis=1))
-                inner = spec[:, 1:-1]
-                is_peak = (inner > spec[:, :-2]) & (inner > spec[:, 2:])
-                peaks = []  # (t, bin) in deterministic order
-                for t in range(nf):
-                    bins = np.nonzero(is_peak[t])[0] + 1
-                    if bins.size == 0:
-                        continue
-                    mags = spec[t, bins]
-                    order = np.lexsort((bins, -mags))[:peaks_per_frame]
-                    peaks.extend((t, int(bins[j])) for j in order)
-                peaks.sort()
-                for i, (t1, f1) in enumerate(peaks):
-                    taken = 0
-                    for t2, f2 in peaks[i + 1 :]:
-                        if t2 == t1:
-                            continue
-                        if t2 - t1 > max_dt:
-                            break
-                        h = (f1 << 24) | (f2 << 12) | (t2 - t1)
-                        out.append(
-                            {
-                                "media_id": row["media_id"],
-                                "fp_hash": h,
-                                "t": t1,
-                            }
-                        )
-                        taken += 1
-                        if taken >= fanout:
-                            break
-            yield pd.DataFrame(out, columns=cols)
-
-    pruned = df.filter(F.col("kind") == "audio").select(
-        "media_id", "content"
-    )
-    return pruned.mapInPandas(_fp, schema=AUDIO_FP_SCHEMA)
-
-
-def match_audio_fingerprints(
-    fps: DataFrame,
-    min_votes: int = 5,
-    max_hash_clips: int | None = None,
-) -> DataFrame:
-    """Content-match clip pairs from landmark fingerprints: equi-join
-    on ``fp_hash``, then an OFFSET-CONSISTENCY vote — a true match's
-    hash collisions concentrate at one Δt = t_a − t_b (the relative
-    time offset of the two recordings), while chance collisions
-    scatter. Votes = DISTINCT landmark hashes agreeing on the best
-    single offset (distinct, not raw join rows: a sustained tone
-    repeats one hash at many anchor times, which would otherwise
-    spam k·l offset-aligned rows for a chance shared note — the
-    melody evidence is how many DIFFERENT landmarks align). Pairs
-    with ``votes >= min_votes`` are matches. Returns
-    (id_a, id_b, offset, votes), id_a < id_b.
-
-    Scale: the join key is a 36-bit landmark hash — selective by
-    construction. ``max_hash_clips`` optionally drops hashes present
-    in more than that many clips (the Zipf head of common spectral
-    motifs — silence hum, test tones) BEFORE the self-join, the same
-    hot-key guard as segment dedup's blocklist; with it the join is
-    skew-bounded and the shuffle carries (id, hash, t) rows only."""
-    if max_hash_clips is not None:
-        hot = (
-            fps.groupBy("fp_hash")
-            .agg(F.count_distinct("media_id").alias("nc"))
-            .filter(F.col("nc") > max_hash_clips)
-            .select("fp_hash")
-        )
-        fps = fps.join(hot, "fp_hash", "left_anti")
-    a = fps.alias("a")
-    b = fps.alias("b")
-    votes = (
-        a.join(
-            b,
-            (F.col("a.fp_hash") == F.col("b.fp_hash"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            (F.col("a.t") - F.col("b.t")).alias("offset"),
-        )
-        .agg(F.count_distinct("a.fp_hash").alias("votes"))
-    )
-    w = Window.partitionBy("id_a", "id_b").orderBy(
-        F.col("votes").desc(), F.col("offset")
-    )
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("votes") >= min_votes))
-        .select("id_a", "id_b", "offset", "votes")
-    )

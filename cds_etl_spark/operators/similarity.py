@@ -70,7 +70,6 @@ def ivf_assign(
     vec_col: str = "embedding",
     cid_col: str = "cid",
     cvec_col: str = "cvec",
-    dim: int | None = None,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (max cosine,
     centroid-id tiebreak): the IVF index build.
@@ -85,63 +84,36 @@ def ivf_assign(
     resolve by centroid id identically on any engine (the max key is
     (sim, -cid): highest similarity, then smallest centroid id).
     """
-    # With a known ``dim``, the cosine decomposes into an unrolled
-    # dot product plus norms computed ONCE per side BEFORE the
-    # crossjoin (n + C norm evaluations instead of 3·C·n HOF passes
-    # over the expansion) — bit-identical values.
-    if dim is not None:
-        from cds_etl_spark.functions.vector import dot_product_fixed
-
-        left = df.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).withColumn("_vn", l2_norm(F.col("_v")))
-        right = centroids.select(
-            F.col(cid_col),
-            F.col(cvec_col),
-            l2_norm(F.col(cvec_col)).alias("_cn"),
+    # r15 (guide §4.3/§8): norms once per SIDE before the C-way
+    # expansion — cosine_similarity per pair ran three interpreted HOF
+    # passes (dot + both self-dots) over every (vector, centroid) row;
+    # dot/(vn*cn) associates exactly like dot/(|a|*|b|), so the doubles
+    # are bit-identical.
+    scored = (
+        df.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
         )
-        scored = left.join(F.broadcast(right)).select(
+        .withColumn("_vn", l2_norm(F.col("_v")))
+        .join(
+            F.broadcast(
+                centroids.select(
+                    F.col(cid_col),
+                    F.col(cvec_col),
+                    l2_norm(F.col(cvec_col)).alias("_cn"),
+                )
+            )
+        )
+        .select(
             id_col,
             "_v",
             F.col(cid_col),
             F.round(
-                dot_product_fixed(F.col("_v"), F.col(cvec_col), dim)
+                dot_product(F.col("_v"), F.col(cvec_col))
                 / (F.col("_vn") * F.col("_cn")),
                 6,
             ).alias("_sim"),
         )
-    else:
-        # r15 (guide §4.3/§8): norms once per SIDE before the C-way
-        # expansion — cosine_similarity per pair ran three interpreted
-        # HOF passes (dot + both self-dots) over every (vector,
-        # centroid) row; dot/(vn*cn) associates exactly like
-        # dot/(|a|*|b|), so the doubles are bit-identical.
-        scored = (
-            df.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-            )
-            .withColumn("_vn", l2_norm(F.col("_v")))
-            .join(
-                F.broadcast(
-                    centroids.select(
-                        F.col(cid_col),
-                        F.col(cvec_col),
-                        l2_norm(F.col(cvec_col)).alias("_cn"),
-                    )
-                )
-            )
-            .select(
-                id_col,
-                "_v",
-                F.col(cid_col),
-                F.round(
-                    dot_product(F.col("_v"), F.col(cvec_col))
-                    / (F.col("_vn") * F.col("_cn")),
-                    6,
-                ).alias("_sim"),
-            )
-        )
+    )
     best = scored.groupBy(id_col).agg(
         F.max_by(
             F.struct(F.col(cid_col).alias("c"), F.col("_v").alias("v")),

@@ -1251,10 +1251,7 @@ def qs146(spark: SparkSession, sf: str) -> DataFrame:
             F.col("embedding").cast("array<double>").alias("cvec"),
         )
     )
-    # dim=64 is the corpus contract (the same literal qs112's hyperplane
-    # SQL hard-codes): unrolled codegen dots + pre-join norms instead of
-    # three interpreted HOF passes per pair (r15, guide §4.3/§8).
-    out = semantic_dedup(emb, anchors, threshold=0.4, dim=64)
+    out = semantic_dedup(emb, anchors, threshold=0.4)
     return out.select(
         "vec_id", "cid", F.col("is_dup").cast("long").alias("is_dup")
     )

@@ -374,7 +374,7 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
     protobuf (pyspark/sql/streaming/proto) — without a working
     ``google.protobuf``, Spark's driver worker crashes at stream
     start, so this raises up front with a clear message instead
-    (same boundary policy as the PIL-gated jpeg path).
+    (same boundary policy as the PyAV-gated H.264 path).
 
     The protobuf-absence decision (r14, recorded PERMANENT
     environment gate — same rigor as the jpeg and PyAV codec gates):

@@ -1,5 +1,5 @@
-"""Perceptual-hash image dedup and audio signal features
-(operators/multimodal.py round-6 additions).
+"""Perceptual-hash image dedup and the persisted pHash index
+(operators/multimodal.py).
 
 pHash contract: identical pixels → identical hash regardless of the
 container format; perceptually-near images (noise, brightness) →
@@ -9,22 +9,16 @@ property-tested against brute force.
 """
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from cds_etl_spark.operators.multimodal import (
-    AUDIO_FEATURES_SCHEMA,
     MEDIA_SCHEMA,
     PHASH_SCHEMA,
-    encode_png,
-    encode_ppm,
-    encode_wav,
-    extract_audio_features,
     hamming_near_dup,
     phash64,
     phash_images,
-    synthetic_media,
 )
+from tests.media_codecs import encode_png, encode_ppm, synthetic_media
 
 
 def _img(seed: int, h: int = 48, w: int = 64) -> np.ndarray:
@@ -145,63 +139,6 @@ def test_phash_end_to_end_near_dup(spark):
     assert {(p["id_a"], p["id_b"]) for p in pairs} == {(0, 100)}
 
 
-def test_audio_features_sine_and_silence(spark):
-    rate = 8000
-    t = np.arange(rate)  # 1 s
-    sine = (0.5 * 32767 * np.sin(2 * np.pi * 440 * t / rate)).astype("<i2")
-    half_silent = np.concatenate([sine, np.zeros(rate, dtype="<i2")])
-    quiet = np.zeros(rate, dtype="<i2")
-    rows = [
-        (1, "audio", bytearray(encode_wav(sine, rate)),
-         ("wav", 0, 0, rate, 1)),
-        (2, "audio", bytearray(encode_wav(half_silent, rate)),
-         ("wav", 0, 0, rate, 1)),
-        (3, "audio", bytearray(encode_wav(quiet, rate)),
-         ("wav", 0, 0, rate, 1)),
-        (4, "image", bytearray(b"not audio"), ("ppm", 1, 1, 0, 1)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_audio_features(df)
-    assert feats.schema == AUDIO_FEATURES_SCHEMA
-    by_id = {r["media_id"]: r for r in feats.collect()}
-    assert set(by_id) == {1, 2, 3}  # image row never decoded
-    s = by_id[1]
-    assert s["sample_rate"] == rate and s["n_samples"] == rate
-    assert abs(s["duration_s"] - 1.0) < 1e-6
-    # Sine at amplitude 0.5: RMS = 0.5/sqrt(2) ~ 0.354.
-    assert abs(s["rms"] - 0.3536) < 0.01
-    # 440 Hz crosses zero 880 times/s → ZCR ~ 880/8000 = 0.11.
-    assert abs(s["zero_cross_rate"] - 0.11) < 0.01
-    assert s["silence_frac"] == 0.0
-    assert abs(by_id[2]["silence_frac"] - 0.5) < 0.02
-    assert by_id[3]["silence_frac"] == 1.0 and by_id[3]["rms"] == 0.0
-
-
-def test_audio_features_stereo_counts_frames_not_samples(spark):
-    # A stereo clip must report FRAME counts: n_samples = frames (not
-    # frames x channels), duration unchanged vs its mono mix, and the
-    # framed silence computation must not blow up on the 2-D layout.
-    rate = 8000
-    t = np.arange(rate)  # 1 s
-    left = (0.5 * 32767 * np.sin(2 * np.pi * 440 * t / rate)).astype("<i2")
-    stereo = np.stack([left, left], axis=1)  # identical channels
-    rows = [
-        (1, "audio", bytearray(encode_wav(left, rate)),
-         ("wav", 0, 0, rate, 1)),
-        (2, "audio", bytearray(encode_wav(stereo, rate)),
-         ("wav", 0, 0, rate, 2)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    by_id = {r["media_id"]: r for r in extract_audio_features(df).collect()}
-    mono, st = by_id[1], by_id[2]
-    assert st["n_samples"] == rate  # frames, not 2*rate
-    assert abs(st["duration_s"] - 1.0) < 1e-6
-    # Identical channels -> the mono mix is the same signal: every
-    # feature matches the mono clip exactly.
-    for f in ["rms", "zero_cross_rate", "silence_frac"]:
-        assert abs(st[f] - mono[f]) < 1e-6
-
-
 def test_bands_for_rejects_guarantee_breaking_distance(spark):
     from cds_etl_spark.operators.multimodal import _bands_for
 
@@ -305,71 +242,6 @@ def test_stream_media_ingest_with_index(spark, tmp_path):
     assert stats.select("n_bands").distinct().collect()[0][0] == _bands_for(6)
 
 
-def test_image_quality_features(spark):
-    """Sharp random-texture image scores high sharpness; its box-
-    blurred copy scores much lower; a flat image has ~zero contrast,
-    sharpness and entropy."""
-    from cds_etl_spark.operators.multimodal import (
-        IMAGE_QUALITY_SCHEMA,
-        image_quality_features,
-    )
-
-    rng = np.random.default_rng(21)
-    sharp = rng.integers(0, 256, (64, 64, 3)).astype(np.uint8)
-    # Blur via repeated 4-neighbor averaging (4 passes ~ gaussian;
-    # pure numpy, no scipy).
-    b = sharp.astype(np.float64)
-    for _ in range(4):
-        b = (
-            b
-            + np.roll(b, 1, 0) + np.roll(b, -1, 0)
-            + np.roll(b, 1, 1) + np.roll(b, -1, 1)
-        ) / 5.0
-    blurred = np.clip(b, 0, 255).astype(np.uint8)
-    flat = np.full((64, 64, 3), 200, dtype=np.uint8)
-    rows = [
-        (1, "image", bytearray(encode_ppm(sharp)), ("ppm", 64, 64, 0, 1)),
-        (2, "image", bytearray(encode_ppm(blurred)), ("ppm", 64, 64, 0, 1)),
-        (3, "image", bytearray(encode_ppm(flat)), ("ppm", 64, 64, 0, 1)),
-        (4, "audio", bytearray(b"x"), ("wav", 0, 0, 8000, 1)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = image_quality_features(df)
-    assert feats.schema == IMAGE_QUALITY_SCHEMA
-    by_id = {r["media_id"]: r for r in feats.collect()}
-    assert set(by_id) == {1, 2, 3}
-    assert by_id[1]["sharpness"] > 10 * by_id[2]["sharpness"]
-    assert by_id[3]["contrast"] == 0.0 and by_id[3]["sharpness"] == 0.0
-    assert by_id[3]["gray_entropy"] == 0.0
-    assert by_id[1]["gray_entropy"] > 6.0  # near-uniform histogram
-    assert abs(by_id[3]["brightness"] - 200.0) < 1e-6
-
-
-def test_spectral_features_sine_ground_truth(spark):
-    from cds_etl_spark.operators.multimodal import extract_spectral_features
-
-    rate = 8000
-    t = np.arange(2 * rate)
-    tone = (0.6 * 32767 * np.sin(2 * np.pi * 440 * t / rate)).astype("<i2")
-    hiss_rng = np.random.default_rng(4)
-    hiss = (hiss_rng.uniform(-0.3, 0.3, 2 * rate) * 32767).astype("<i2")
-    rows = [
-        (1, "audio", bytearray(encode_wav(tone, rate)), ("wav", 0, 0, rate, 1)),
-        (2, "audio", bytearray(encode_wav(hiss, rate)), ("wav", 0, 0, rate, 1)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    by_id = {r["media_id"]: r for r in extract_spectral_features(df).collect()}
-    # Pure 440 Hz tone: dominant bin lands on 440, centroid ~440,
-    # nothing above 4 kHz.
-    assert abs(by_id[1]["dominant_freq_hz"] - 440.0) < 1.0
-    assert abs(by_id[1]["spectral_centroid_hz"] - 440.0) < 5.0
-    assert by_id[1]["high_freq_ratio"] < 0.01
-    # White-ish noise: centroid near band middle (~2 kHz for 4 kHz
-    # Nyquist), energy above 4 kHz substantial... (Nyquist here is
-    # 4 kHz, so high_freq_ratio ~ 0 by construction — use centroid.)
-    assert 1500 < by_id[2]["spectral_centroid_hz"] < 2500
-
-
 def test_compact_phash_index_equivalence(spark, tmp_path):
     """Double-append then compact: row count collapses, probe results
     are identical against original and compacted index."""
@@ -395,95 +267,6 @@ def test_compact_phash_index_equivalence(spark, tmp_path):
     a = {tuple(r) for r in probe_phash_index(spark, batch, idx).collect()}
     b = {tuple(r) for r in probe_phash_index(spark, batch, out).collect()}
     assert a == b and len(a) >= 5
-
-
-def test_detect_scene_cuts(spark):
-    """Planted two-shot video: constant dark frames, then constant
-    bright frames — exactly one cut, at the shot boundary, through
-    the REAL mp4 container path and the fake-payload path alike."""
-    from cds_etl_spark.operators.mp4 import encode_mp4
-    from cds_etl_spark.operators.multimodal import detect_scene_cuts
-
-    w = h = 16
-    dark = np.full(w * h, 10, dtype=np.uint8).tobytes()
-    bright = np.full(w * h, 200, dtype=np.uint8).tobytes()
-    frames = [dark] * 4 + [bright] * 4
-    rows = [
-        (1, "video", bytearray(encode_mp4(frames, w, h)),
-         ("mp4", w, h, 0, 8)),
-        (2, "video", bytearray(b"".join(frames)), ("fake", w, h, 0, 8)),
-        (3, "image", bytearray(b"zz"), ("ppm", 1, 1, 0, 1)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = detect_scene_cuts(df, threshold=30.0).collect()
-    for mid in (1, 2):
-        cuts = sorted(
-            r["frame_idx"] for r in out
-            if r["media_id"] == mid and r["is_cut"] == "cut"
-        )
-        assert cuts == [4], (mid, cuts)
-        runs = [r for r in out if r["media_id"] == mid and r["is_cut"] == "run"]
-        assert len(runs) == 6 and all(r["frame_diff"] == 0.0 for r in runs)
-    assert not any(r["media_id"] == 3 for r in out)
-
-
-def _melody(seed: int, rate: int = 8000, notes: int = 8) -> np.ndarray:
-    # A deterministic "song": a sequence of distinct notes (plus one
-    # harmonic each) with seed-varied durations, so the spectrogram
-    # has clear, time-varying peaks — the structure landmark
-    # fingerprints key on — and unrelated seeds don't share a note
-    # grid.
-    rng = np.random.default_rng(seed)
-    freqs = rng.choice(np.arange(300, 2400, 37), size=notes, replace=False)
-    segs = []
-    for f in freqs:
-        n = int(rate * rng.choice([0.17, 0.21, 0.25, 0.29]))
-        t = np.arange(n)
-        segs.append(
-            0.4 * np.sin(2 * np.pi * f * t / rate)
-            + 0.2 * np.sin(2 * np.pi * 2 * f * t / rate)
-        )
-    x = np.concatenate(segs)
-    return (32767 * 0.8 * x / np.max(np.abs(x))).astype("<i2")
-
-
-def test_audio_fingerprint_match_planted_duplicate(spark):
-    from cds_etl_spark.operators.multimodal import (
-        audio_fingerprints,
-        match_audio_fingerprints,
-    )
-
-    rate = 8000
-    song = _melody(1)
-    # Duplicate: 60 % gain + 2048 samples (8 hops) of leading silence.
-    dup = np.concatenate(
-        [np.zeros(2048, dtype="<i2"), (0.6 * song).astype("<i2")]
-    )
-    rows = [
-        (1, "audio", bytearray(encode_wav(song, rate)), ("wav", 0, 0, rate, 1)),
-        (2, "audio", bytearray(encode_wav(dup, rate)), ("wav", 0, 0, rate, 1)),
-        (3, "audio", bytearray(encode_wav(_melody(2), rate)), ("wav", 0, 0, rate, 1)),
-        (4, "audio", bytearray(encode_wav(_melody(3), rate)), ("wav", 0, 0, rate, 1)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    fps = audio_fingerprints(df)
-    # Deterministic: two runs produce identical hash multisets.
-    s1 = sorted((r["media_id"], r["fp_hash"], r["t"]) for r in fps.collect())
-    s2 = sorted((r["media_id"], r["fp_hash"], r["t"]) for r in fps.collect())
-    assert s1 == s2 and len(s1) > 50
-    matches = match_audio_fingerprints(fps, min_votes=40).collect()
-    pairs = {(r["id_a"], r["id_b"]): r for r in matches}
-    # The planted pair — and ONLY it — matches, at the planted offset
-    # (8 hops of leading silence; sign depends on id order).
-    assert set(pairs) == {(1, 2)}
-    m = pairs[(1, 2)]
-    assert abs(m["offset"]) == 8
-    assert m["votes"] >= 40
-    # The hot-hash prune leaves a selective corpus untouched.
-    pruned = match_audio_fingerprints(
-        fps, min_votes=40, max_hash_clips=3
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in pruned} == {(1, 2)}
 
 
 def test_probe_phash_hot_band_guard(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Hyperplane-LSH bucketing and the IVF assignment: bucketing
-determinism, angular locality on planted neighbours, and the
-equivalence of ``ivf_assign``'s two scoring paths."""
+determinism, angular locality on planted neighbours, and
+``ivf_assign`` against a numpy argmax reference."""
 
 from pyspark.sql import functions as F
 
@@ -63,10 +63,10 @@ def test_lsh_assign_is_deterministic_and_total(spark, sf_dir):
     assert all(d <= 1 for d in hamming.values()), hamming
 
 
-def test_ivf_assign_unrolled_matches_hof(spark):
-    """The ``dim``-unrolled scoring path and the HOF path produce
-    identical (id -> cid) maps, including 6-dp-rounded ties resolving
-    to the smallest centroid id."""
+def test_ivf_assign_matches_numpy_argmax(spark):
+    """``ivf_assign`` gives every vector the centroid of maximal
+    6-dp-rounded cosine, ties resolving to the smallest centroid id —
+    checked against a numpy argmax over the same vectors."""
     import numpy as np
 
     rng = np.random.default_rng(17)
@@ -78,12 +78,21 @@ def test_ivf_assign_unrolled_matches_hof(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     # cid 9 duplicates centroid 5: every blob-5 vector scores an exact
     # tie between them and must take cid 5.
+    cids = list(range(8)) + [9]
+    cmat = np.vstack([centers, centers[5]])
     cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)]
-        + [(9, [float(x) for x in centers[5]])],
+        [(cid, [float(x) for x in c]) for cid, c in zip(cids, cmat)],
         "cid int, cvec array<double>",
     )
-    a = {r["vec_id"]: r["cid"] for r in ivf_assign(df, cents, dim=16).collect()}
-    c = {r["vec_id"]: r["cid"] for r in ivf_assign(df, cents).collect()}  # HOF path
-    assert a == c
-    assert 9 not in a.values() and 5 in a.values()
+    got = {r["vec_id"]: r["cid"] for r in ivf_assign(df, cents).collect()}
+
+    expect = {}
+    norms = np.linalg.norm(cmat, axis=1)
+    for vid, v in vecs:
+        v = np.asarray(v)
+        sims = np.round(cmat @ v / (norms * np.linalg.norm(v)), 6)
+        # max over (sim, -cid): highest similarity, then smallest cid
+        expect[vid] = -max(zip(sims, (-c for c in cids)))[1]
+    assert got == expect
+    assert all(cid == 5 for vid, cid in got.items() if vid % 8 == 5)
+    assert 9 not in got.values()
