@@ -414,10 +414,10 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     timestamp = batch_timestamp()  # O33: one stamp names the whole run
     log.info("batch %s timestamp %s", config.get("DATA_BATCH_NAME"), timestamp)
 
+    from cds_etl_spark.session import get_spark, jvm_counters, stop_spark
+
     own_session = spark is None
     if spark is None:
-        from cds_etl_spark.session import get_spark
-
         spark = get_spark("cds_etl_spark_cli")
     try:
         model = load_model(config["NODE_FILE"], config.get("MODEL_FILE_PROPS"))
@@ -446,7 +446,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                     "uploaded %d transformed + %d raw files under %s",
                     len(up["transformed"]), len(up["raw"]), timestamp,
                 )
+        if own_session:
+            log.info("jvm %s", jvm_counters(spark))
     finally:
         if own_session:
-            spark.stop()
+            stop_spark(spark)
     return 0

@@ -6,13 +6,30 @@ overflow/parse behavior is permissive like the reference pandas code)
 and for scale (AQE on with partition coalescing and skew-join handling,
 shuffle partitions sized to the local core count; on a real cluster the
 same settings let AQE re-plan to the data).
+
+When ``get_spark`` launches the local driver JVM itself, it starts that
+JVM from a JDK class-data-sharing archive (AppCDS) of the classes Spark
+loads at start, which roughly halves the JVM's cold start. The archive
+lives under ``${XDG_CACHE_HOME:-~/.cache}/cds_etl_spark/``, keyed by the
+JDK, the Spark jar set and the driver heap size. The first launch per
+key dumps it at JVM exit; a dump is promoted to the archive only once it
+is proven to map (see ``_archive_launch``). ``stop_spark`` stops a
+session and waits for its JVM, so a run's dump finishes before it
+returns; ``jvm_counters`` reads the JVM's JIT time, loaded classes and
+archive.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
 import weakref
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Configs every engine session needs, whether we build the session or an
@@ -250,6 +267,274 @@ def _apply_profile(spark: SparkSession, marker: str, n: int) -> None:
                 pass
 
 
+# JVM class-data archive. Cache files, all named by the archive key:
+#   <key>.jsa             the promoted archive; used only while <key>.ok
+#                         matches its size and mtime
+#   <key>.jsa.<pid>.part  a dump in progress, written by a JVM at exit
+#   <key>.cp              the classpath the dumping JVM ran with, for trials
+#   <key>.failed          a dump of this key failed its trial: never dump again
+#   conf/                 the empty SPARK_CONF_DIR archived launches run with
+# The JVM neither dumps nor maps while a non-empty directory is on its
+# classpath, and Spark puts the conf dir there; while the real conf dir
+# holds only templates, an empty one configures Spark the same way.
+# Without the log switches a dump prints ~1,400 [warning][cds] lines to
+# stdout (classes it cannot archive, e.g. from signed jars).
+_CDS_LOG_OFF = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+# The part the gateway launched by get_spark dumps to at exit, if any.
+_DUMP_PART: str | None = None
+
+
+class _Launch(NamedTuple):
+    java_options: str  # for spark.driver.extraJavaOptions
+    conf_dir: str  # SPARK_CONF_DIR while the gateway launches
+    part: str | None  # the dump target when this launch builds the archive
+
+
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "cds_etl_spark")
+
+
+def _java() -> str | None:
+    """The java binary spark-class runs, resolved."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    return os.path.realpath(java) if java and os.path.isfile(java) else None
+
+
+def _archive_key(java: str, spark_home: str, heap: str) -> str:
+    """What an archive is valid for: the JDK build, the jar set on the
+    classpath, and the heap size (32 GB or more switches off compressed
+    oops)."""
+    h = hashlib.sha256(f"{java}\0{heap}\0".encode())
+    try:
+        with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
+            h.update(f.read())
+    except OSError:
+        pass
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        h.update(f"{name}\0{os.path.getsize(os.path.join(jars, name))}\0".encode())
+    return h.hexdigest()[:16]
+
+
+def _read(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def _write(path: str, text: str) -> None:
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
+
+
+def _stat_stamp(path: str) -> str:
+    st = os.stat(path)
+    return f"{st.st_size} {st.st_mtime_ns}"
+
+
+def _promoted(jsa: str) -> bool:
+    try:
+        return _read(jsa[: -len(".jsa")] + ".ok") == _stat_stamp(jsa)
+    except OSError:
+        return False
+
+
+def _promote(part: str) -> None:
+    """Make a proven dump the archive of its key, and delete every other
+    key's files (an archive is ~170 MB)."""
+    cache, name = os.path.split(part)
+    key = name.split(".", 1)[0]
+    jsa = os.path.join(cache, key + ".jsa")
+    os.replace(part, jsa)
+    _write(os.path.join(cache, key + ".ok"), _stat_stamp(jsa))
+    for other in os.listdir(cache):
+        if other != "conf" and not other.startswith(key + "."):
+            _remove(os.path.join(cache, other))
+
+
+def _writer_alive(part: str) -> bool:
+    """Whether a live process (the JVM dumping it) names ``part``; the
+    dumping JVM may outlive the Python process that launched it."""
+    needle = part.encode()
+    try:
+        pids = [p for p in os.listdir("/proc") if p.isdigit()]
+    except OSError:
+        return True  # cannot tell: leave the part alone
+    for pid in pids:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if needle in f.read():
+                    return True
+        except OSError:
+            continue
+    return False
+
+
+def _trial(java: str, heap: str, archive: str, classpath: str | None) -> bool:
+    """Whether ``archive`` maps in a JVM with the launch's classpath and
+    heap. A truncated archive crashes the JVM at start, so it must never
+    reach a real launch."""
+    if classpath is None:
+        return False
+    cmd = [
+        java, f"-Xmx{heap}", "-Xshare:on", f"-XX:SharedArchiveFile={archive}",
+        *_CDS_LOG_OFF.split(), "-XX:ErrorFile=/dev/null",
+        "-XX:-CreateCoredumpOnCrash", "-cp", classpath, "-version",
+    ]
+    try:
+        done = subprocess.run(
+            cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, timeout=120
+        )
+    except (OSError, subprocess.SubprocessError):
+        return False
+    return done.returncode == 0
+
+
+def _archive_launch(heap: str) -> _Launch | None:
+    """The archive options for a driver JVM that get_spark is about to
+    launch, or None to launch it as Spark would.
+
+    Before deciding, settles this key's dead dumps: a part whose JVM has
+    exited is promoted if it maps (a harness that waits for its JVM
+    without ``stop_spark`` leaves it so), and deleted otherwise, with a
+    stamp so the key is never dumped again. A ``<key>.jsa`` that was
+    not promoted is deleted unused. A new dump starts only when the
+    cache is writable, the key has not failed and no live JVM is
+    already dumping it.
+    """
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None  # no new JVM
+    # Classpath entries of their own, or flags placed after ours.
+    if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
+        return None
+    if os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell").strip() != "pyspark-shell":
+        return None
+    java = _java()
+    spark_home = _find_spark_home()
+    user_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if java is None or any(
+        not n.endswith(".template")
+        for n in (os.listdir(user_conf) if os.path.isdir(user_conf) else ())
+    ):
+        return None
+    cache = _cache_dir()
+    conf = os.path.join(cache, "conf")
+    try:
+        os.makedirs(conf, exist_ok=True)
+        key = _archive_key(java, spark_home, heap)
+    except OSError:
+        return None
+    stem = os.path.join(cache, key)
+    jsa = stem + ".jsa"
+    writable = os.access(cache, os.W_OK)
+    busy = False
+    for name in sorted(os.listdir(cache)):
+        if not (name.startswith(key + ".jsa.") and name.endswith(".part")):
+            continue
+        part = os.path.join(cache, name)
+        if _writer_alive(part):
+            busy = True
+        elif not writable:
+            continue
+        elif not _trial(java, heap, part, _read(stem + ".cp")):
+            _write(stem + ".failed", "")
+            _remove(part)
+        elif not _promoted(jsa):
+            _promote(part)
+        else:
+            _remove(part)
+    if _promoted(jsa):
+        return _Launch(f"-XX:SharedArchiveFile={jsa} {_CDS_LOG_OFF}", conf, None)
+    if os.path.exists(jsa) and writable:
+        _remove(jsa)
+        _remove(stem + ".ok")
+    if busy or not writable or os.path.exists(stem + ".failed"):
+        return None
+    part = f"{jsa}.{os.getpid()}.part"
+    return _Launch(f"-XX:ArchiveClassesAtExit={part} {_CDS_LOG_OFF}", conf, part)
+
+
+def _launch(builder: SparkSession.Builder, heap: str) -> SparkSession:
+    """``builder.getOrCreate()``, starting a new driver JVM from the
+    class-data archive where ``_archive_launch`` allows."""
+    global _DUMP_PART
+    launch = _archive_launch(heap)
+    if launch is None:
+        return builder.getOrCreate()
+    builder = builder.config("spark.driver.extraJavaOptions", launch.java_options)
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = launch.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if launch.part is not None:
+        _DUMP_PART = launch.part
+        classpath = spark.sparkContext._jvm.java.lang.System.getProperty("java.class.path")
+        _write(launch.part.split(".jsa.", 1)[0] + ".cp", classpath)
+    return spark
+
+
+def stop_spark(spark: SparkSession) -> int | None:
+    """Stop ``spark``, shut down the driver JVM this process launched and
+    wait for it to exit; returns its exit code (None when the JVM is not
+    this process's child). A JVM that dumps the class-data archive
+    writes it while exiting; when it exits 0 the dump is promoted here.
+    A later ``get_spark`` launches a new JVM."""
+    global _DUMP_PART
+    gateway = SparkContext._gateway
+    spark.stop()
+    code = None
+    if gateway is not None:
+        gateway.shutdown()
+        SparkContext._gateway = SparkContext._jvm = None
+        proc = gateway.proc
+        if proc is not None:
+            proc.stdin.close()  # the gateway JVM exits at EOF on its stdin
+            try:
+                code = proc.wait(timeout=60)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                code = proc.wait()
+    part, _DUMP_PART = _DUMP_PART, None
+    if part is not None and code == 0 and os.path.exists(part):
+        _promote(part)
+    return code
+
+
+def jvm_counters(spark: SparkSession) -> dict:
+    """The driver JVM's whole-life JIT compile seconds, loaded-class
+    total, and the class-data archive it was given ('' for none)."""
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    hotspot = mf.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return {
+        "jit_compile_s": mf.getCompilationMXBean().getTotalCompilationTime() / 1000,
+        "classes_loaded": mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        "shared_archive": hotspot.getVMOption("SharedArchiveFile").getValue(),
+    }
+
+
 def get_spark(
     app_name: str = "cds_etl_spark",
     cores: int | None = None,
@@ -270,13 +555,22 @@ def get_spark(
     latency tricks that win at 50 MB lose at 2 GB (tiny-task
     explosion). Cluster deployments and the oracle tests keep the
     plain scale profile.
+
+    When this call launches the driver JVM (no live gateway, no
+    ``PYSPARK_GATEWAY_PORT``), the JVM starts from the class-data
+    archive, or dumps it at exit if there is none yet. The archive is
+    skipped, and the JVM starts exactly as Spark would, when the conf dir
+    holds any file besides ``*.template`` or ``HADOOP_CONF_DIR``,
+    ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH`` or a custom
+    ``PYSPARK_SUBMIT_ARGS`` is set. See the module docstring.
     """
     n = cores or default_parallelism()
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
@@ -296,7 +590,7 @@ def get_spark(
             builder = builder.config(k, v)
     else:
         requested = "false"
-    spark = builder.getOrCreate()
+    spark = _launch(builder, heap)
     # On a pre-existing session getOrCreate applies only the builder's
     # runtime SQL configs (Spark 4) or none at all (older behavior) —
     # either way the requested profile's conf SET may not be live, and

@@ -9,7 +9,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cds_etl_spark.catalog import TABLES  # noqa: E402
-from cds_etl_spark.session import get_spark  # noqa: E402
+from cds_etl_spark.session import get_spark, stop_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -18,6 +18,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("cds_etl_spark_tests", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
+    stop_spark(s)
 
 
 @pytest.fixture(scope="session")
